@@ -646,10 +646,6 @@ def _build_huffman(bits: tuple[int, ...], huffval: bytes):
     return _huff_lut(tuple(bits), bytes(huffval))
 
 
-def _huff_decode(reader: _BitReader, lut) -> int:
-    return reader.huff(lut)
-
-
 def _extend(v: int, size: int) -> int:
     """The spec's EXTEND: map magnitude bits back to a signed value."""
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
@@ -666,7 +662,7 @@ def parse_jpeg(payload: bytes):
     markers validated in cycle order, DC predictor reset per segment).
     Raises on: missing SOI, progressive or multi-component streams,
     16-bit quant tables, truncated segments or scan data, invalid
-    Huffman codes, a missing or out-of-cycle restart marker,
+    Huffman codes, DC size categories above 11, a missing or out-of-cycle restart marker,
     coefficient index overflow — a corrupt payload fails loudly."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
@@ -783,6 +779,8 @@ def parse_jpeg(payload: bytes):
         for ci in range(ncomp):
             base = (ci * nmcu + mcu) << 6
             s, raw, size = reader.huff_recv(dc_tabs[ci])
+            if s > 11:  # a DC symbol is a size category, 0..11
+                raise ValueError("DC size category out of range")
             if size:
                 preds[ci] += _extend(raw, size)
             ai(base)

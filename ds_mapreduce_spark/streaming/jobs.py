@@ -1,37 +1,55 @@
-"""Structured Streaming jobs (E13 stream form).
+"""Structured Streaming jobs: the stream twins of the batch queries.
 
 The reference has no streaming at all (SURVEY.md §2.3 — tokio-stream
 is a dead dependency, src never imports it); this is the Spark-native
-stream surface for the same event-time window semantics as the batch
-queries in plans/stream_queries.py: identical transformation code,
-``readStream`` instead of ``read``, plus a watermark for late data.
+stream surface. A twin shares its transformation code with the batch
+query it must reproduce and reads with ``readStream`` instead of
+``read``. With ``availableNow`` a twin is an incremental batch — how a
+100 TB backfill and the live stream share one code path.
 
-Scale notes: the windowed aggregation keeps state per (window, type)
-in the state store; the watermark bounds state size by evicting
-windows older than max(event_time) - delay. With
-``availableNow`` the same job is an incremental batch — how a 100 TB
-backfill and the live stream share one code path.
+Every feed is read through ``_source``; the memory-sink twins drain
+through ``_drain``; every ``foreachBatch`` fold runs through ``_fold``,
+which keeps this versioned-state contract:
+
+- Layout: micro-batch ``k`` writes each of its state tables to
+  ``{state_dir}/v{k}/<name>`` (``v3/sketch``, ``v3/counts``, ...).
+- ``v{k}`` is computed from ``v{k-1}`` and batch ``k`` alone. Batch 0
+  starts from nothing, or from the ``v-1`` seed tables a fold writes
+  before the stream starts (a history fingerprint store, a zero
+  carried token offset).
+- Retry: a micro-batch that fails before its checkpoint commit is
+  re-run under the same id over the same files, and overwrites its own
+  ``v{k}`` from the unchanged ``v{k-1}``. So the state is idempotent
+  under at-least-once retry: exactly-once state
+  (tests/test_streaming_faults.py injects the failure).
+- Final read: the versions up to the last batch that fired in this
+  run, or every landed version when none fired (an availableNow resume
+  with nothing new). A state-shaped fold presents the last of them; a
+  log-shaped fold (per-batch verdicts, pairs, manifests) presents their
+  union. Versions a previous run left above the last fired batch are
+  stale and never read. With nothing landed (an empty feed into a fresh
+  state dir) the answer is empty, with the normal run's columns.
+
+Scale: per micro-batch a fold reads one state version plus its delta,
+so its cost follows |state| + |batch|, never the stream's history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from functools import partial
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ds_mapreduce_spark.functions.temporal import epoch_sec, epoch_us
 from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
 
-def existing_state_versions(
-    spark: SparkSession, state_dir: str, prefix: str = "v"
-) -> list[int]:
+def existing_state_versions(spark: SparkSession, state_dir: str) -> list[int]:
     """Batch ids with landed state under ``state_dir`` (dirs named
-    ``{prefix}{int}``), via the Hadoop FS API so any scheme (local,
-    HDFS, S3A) works. The versioned-state jobs need this for the two
-    cases where ``foreachBatch`` never fires: a genuinely empty feed,
-    and an availableNow RESUME whose checkpoint says nothing is new —
-    in the second case the right answer is the state already on disk,
-    not a crash on ``v-1`` (ADVICE r6)."""
+    ``v{int}``, the ``v-1`` seed included), via the Hadoop FS API so any
+    scheme (local, HDFS, S3A) works."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(state_dir)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -40,30 +58,131 @@ def existing_state_versions(
     out = []
     for st in fs.listStatus(path):
         name = st.getPath().getName()
-        if name.startswith(prefix):
+        if name.startswith("v"):
             try:
-                out.append(int(name[len(prefix):]))
+                out.append(int(name[1:]))
             except ValueError:
                 pass
     return sorted(out)
 
 
-def _resolve_final_version(
-    spark: SparkSession, state_dir: str, fired: int, floor: int = 0
-) -> int | None:
-    """Final state version to read after ``awaitTermination``: the max
-    batch id that fired this run, else the latest landed version from a
-    previous run (resume-with-nothing-new), else None (empty feed —
-    callers fall back to an empty-schema result). ``floor`` excludes
-    seed versions (the ``v-1`` initial store some jobs write)."""
-    if fired >= floor:
-        return fired
-    landed = [v for v in existing_state_versions(spark, state_dir) if v >= floor]
-    return landed[-1] if landed else None
+def _source(
+    spark: SparkSession,
+    path: str,
+    *,
+    per_file: bool = False,
+    schema=None,
+    options: dict | None = None,
+    fmt: str = "parquet",
+) -> DataFrame:
+    """The one streaming reader: ``path``, a directory or a single file,
+    as a stream.
+
+    The events encoding conf is set for every feed, before the schema
+    probe: it only changes how INT64-nanos columns read, and
+    ``load_table`` pins the session to UTC anyway. The stream then goes
+    through ``normalize_events_ts``, a no-op without an events ``ts``.
+    ``per_file`` makes each file one micro-batch (every fold).
+    FileStreamSource only lists directories, so a path whose last
+    component has an extension is narrowed to that file."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if schema is None:
+        schema = spark.read.format(fmt).load(path).schema
+    reader = spark.readStream.schema(schema).options(**(options or {}))
+    if per_file:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    base, _, name = path.rpartition("/")
+    if "." in name:
+        reader = reader.option("pathGlobFilter", name)
+        path = base
+    return normalize_events_ts(reader.format(fmt).load(path))
+
+
+def _drain(out: DataFrame, sink_table: str, mode: str = "append") -> DataFrame:
+    """Drain ``out`` (availableNow) into the memory sink ``sink_table``
+    and return the sink's contents."""
+    out.writeStream.format("memory").queryName(sink_table).outputMode(
+        mode
+    ).trigger(availableNow=True).start().awaitTermination()
+    return out.sparkSession.table(sink_table)
+
+
+def _read(spark: SparkSession, state_dir: str, versions: list[int], name: str) -> DataFrame:
+    """The union of state table ``name`` over ``versions``."""
+    return spark.read.parquet(*[f"{state_dir}/v{v}/{name}" for v in versions])
+
+
+def _fold(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    step: Callable,
+    seed: dict[str, DataFrame] | None = None,
+) -> list[int]:
+    """Drain ``stream`` through the versioned-state fold of the module
+    docstring; return the versions the final read may use, oldest first
+    (empty when nothing landed).
+
+    ``step(batch_df, prev)`` returns the batch's state tables as
+    ``{name: table}``, written in that order to ``v{k}/<name>``. A
+    table may instead be a function of ``cur``, the reader of the
+    version being written: it is called once the tables before it have
+    landed, so a fold that aggregates a table it just wrote reads it
+    back instead of recomputing it. ``prev(name)`` reads a table of
+    ``v{k-1}``; ``prev`` is None on batch 0 unless ``seed`` tables were
+    written to ``v-1``."""
+    spark = stream.sparkSession
+    for name, table in (seed or {}).items():
+        table.write.mode("overwrite").parquet(f"{state_dir}/v-1/{name}")
+    fired = -1
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal fired
+        sess = batch_df.sparkSession
+        prev = None
+        if batch_id > 0 or seed:
+            prev = partial(_read, sess, state_dir, [batch_id - 1])
+        cur = partial(_read, sess, state_dir, [batch_id])
+        for name, table in step(batch_df, prev).items():
+            if callable(table):
+                table = table(cur)
+            table.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}/{name}")
+        fired = max(fired, batch_id)
+
+    stream.writeStream.foreachBatch(sink).outputMode("append").trigger(
+        availableNow=True
+    ).option("checkpointLocation", checkpoint_dir).start().awaitTermination()
+    landed = [v for v in existing_state_versions(spark, state_dir) if v >= 0]
+    return [v for v in landed if fired < 0 or v <= fired]
+
+
+def _last(stream: DataFrame, state_dir: str, versions: list[int], step: Callable):
+    """Reader of a state-shaped fold's final state: the last of
+    ``versions``, or, when nothing landed, the tables ``step`` makes from
+    an empty batch, so an empty feed presents an empty answer with the
+    normal columns."""
+    spark = stream.sparkSession
+    if versions:
+        return partial(_read, spark, state_dir, versions[-1:])
+    return step(spark.createDataFrame([], stream.schema), None).__getitem__
+
+
+def _union(
+    spark: SparkSession, state_dir: str, versions: list[int], name: str, schema: str
+) -> DataFrame:
+    """The union of table ``name`` over ``versions`` (a log-shaped fold's
+    answer), or an empty ``schema`` table when nothing landed."""
+    if not versions:
+        return spark.createDataFrame([], schema)
+    return _read(spark, state_dir, versions, name)
 
 
 def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """The shared batch/stream transformation (event-time tumbling agg)."""
+    """The shared batch/stream transformation (event-time tumbling agg).
+    The windowed aggregation keeps state per (window, type) in the state
+    store; the watermark bounds it by evicting windows older than
+    max(event_time) - delay."""
     if events.isStreaming:
         events = events.withWatermark("ts", watermark)
     return (
@@ -93,8 +212,6 @@ def session_window_agg(events: DataFrame, gap: str = "30 minutes", watermark: st
     run_streaming_session_window."""
     if events.isStreaming:
         events = events.withWatermark("ts", watermark)
-    from ds_mapreduce_spark.functions.temporal import epoch_sec
-
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
@@ -121,25 +238,7 @@ def run_streaming_session_window(
     session once its close is final — sessions still extendable within
     the watermark of max event time stay in state, exactly like the
     applyInPandasWithState twin's open sessions."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    out = session_window_agg(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(session_window_agg(_source(spark, events_dir)), sink_table)
 
 
 def run_streaming_wordcount(
@@ -152,27 +251,14 @@ def run_streaming_wordcount(
     HashMap). availableNow drains what exists and stops; the identical
     query tails a growing directory in production.
     """
-    reader = spark.readStream
-    if not text_path.endswith("/") and "." in text_path.rsplit("/", 1)[-1]:
-        base, _, fname = text_path.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        text_path = base
-    lines = reader.text(text_path)
+    lines = _source(spark, text_path, fmt="text")
     counts = (
         lines.select(F.explode(F.split(F.col("value"), r"\s+")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(counts, sink_table, "complete")
 
 
 def run_streaming_dedup(
@@ -191,22 +277,14 @@ def run_streaming_dedup(
     through and state is evicted: the 100 TB configuration, since an
     unbounded distinct-key state store eventually IS the corpus.
     """
-    stream = spark.readStream.schema(schema).parquet(src_dir)
+    stream = _source(spark, src_dir, schema=schema)
     if watermark is not None:
         ts_col, delay = watermark
         stream = stream.withWatermark(ts_col, delay)
         deduped = stream.dropDuplicatesWithinWatermark(key_cols)
     else:
         deduped = stream.dropDuplicates(key_cols)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(deduped, sink_table)
 
 
 def attribution_join(clicks: DataFrame, purchases: DataFrame, horizon: str = "2 hours") -> DataFrame:
@@ -254,59 +332,20 @@ def run_streaming_attribution_join(
 ) -> DataFrame:
     """Stream-stream interval join over the events parquet with an
     availableNow trigger; returns the joined rows from the memory sink."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
+    stream = _source(spark, events_dir)
     clicks = stream.where(F.col("event_type") == "click")
     purchases = stream.where(F.col("event_type") == "purchase")
-    out = attribution_join(clicks, purchases, horizon)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(attribution_join(clicks, purchases, horizon), sink_table)
 
 
 def run_streaming_tumbling_window(
-    spark: SparkSession, events_dir: str, schema=None, sink_table: str = "stream_windows"
+    spark: SparkSession, events_dir: str, sink_table: str = "stream_windows"
 ) -> DataFrame:
     """Run the windowed agg as a stream over a parquet directory with an
     availableNow trigger (process-everything-then-stop), landing in an
     in-memory sink; returns the sink contents as a DataFrame.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if schema is None:
-        # infer AFTER the nanos conf is set (events.ts is INT64 nanos,
-        # which Spark 4 only reads as long under this flag)
-        schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        # FileStreamSource only accepts directories; narrow with a glob
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    out = windowed_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(windowed_counts(_source(spark, events_dir)), sink_table, "complete")
 
 
 def run_streaming_cdc_merge(
@@ -315,58 +354,26 @@ def run_streaming_cdc_merge(
     """Streaming CDC upsert: the change feed arrives as micro-batches
     and each batch MERGES into the landed state via ``foreachBatch`` —
     the latest-wins reduction is the same ``latest_wins_merge`` the
-    batch query (``cdc_latest_wins_merge``) runs in one plan.
-
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``): a retried batch id rewrites its own
-    version from its predecessor, so the sink is idempotent on top of
-    at-least-once delivery (exactly-once state). Returns the final
-    merged state. 100 TB: each micro-batch shuffles only
-    |state ∩ batch keys| + |batch| rows; a bucketed state table drops
-    the state side of that shuffle entirely, and compaction of the
-    version chain is the same incremental-compaction plan as batch.
+    batch query (``cdc_latest_wins_merge``) runs in one plan. Returns
+    the final merged state (versioned-state contract: module docstring).
+    100 TB: each micro-batch shuffles only |state ∩ batch keys| +
+    |batch| rows; a bucketed state table drops the state side of that
+    shuffle entirely, and compaction of the version chain is the same
+    incremental-compaction plan as batch.
     """
     from ds_mapreduce_spark.operators.relational import (
         cdc_change_rows,
         latest_wins_merge,
     )
 
-    schema = spark.read.parquet(orders_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(orders_dir)
-    )
-    feed = cdc_change_rows(stream)
-    last_version: list[int] = [-1]
+    feed = cdc_change_rows(_source(spark, orders_dir, per_file=True))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        rows = batch_df
-        if batch_id > 0:
-            rows = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(
-                batch_df
-            )
-        merged = latest_wins_merge(rows, ["o_orderkey"], "version")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        rows = batch if prev is None else prev("latest").unionByName(batch)
+        return {"latest": latest_wins_merge(rows, ["o_orderkey"], "version")}
 
-    q = (
-        feed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty merged schema
-        return latest_wins_merge(
-            cdc_change_rows(spark.createDataFrame([], schema)),
-            ["o_orderkey"],
-            "version",
-        )
-    return spark.read.parquet(f"{state_dir}/v{final}")
+    versions = _fold(feed, state_dir, checkpoint_dir, step)
+    return _last(feed, state_dir, versions, step)("latest")
 
 
 def run_streaming_pii_scrub(
@@ -382,23 +389,7 @@ def run_streaming_pii_scrub(
     scales by adding executors."""
     from ds_mapreduce_spark.plans.text_queries import pii_scrub_rows
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema)
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    out = pii_scrub_rows(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _drain(pii_scrub_rows(_source(spark, docs_dir)), sink_table)
 
 
 def run_streaming_incremental_dedup(
@@ -410,20 +401,19 @@ def run_streaming_incremental_dedup(
 ) -> DataFrame:
     """Streaming ingest dedup: documents arrive as micro-batches and
     each batch is classified against the ACCUMULATED fingerprint store
-    (initial store = the history corpus's fingerprints) with the same
+    (the ``v-1`` seed = the history corpus's fingerprints) with the same
     ``incremental_dedup`` reduction the batch query grades; hashes of
     this batch's 'new' docs are appended to the store for the next
-    batch.
+    batch. The answer is the union of the per-batch verdict logs.
 
     Semantics note vs the one-shot batch run: a duplicate pair split
     across micro-batches classifies as dup_of_history (the store saw it
     first) rather than dup_in_batch — but the KEPT SET (one owner per
     hash, smallest id wins when arrival order is id-ordered) is
     identical however the feed is chunked, which is the invariant
-    ``tests/test_streaming.py`` pins. State chains through versioned
-    parquet dirs like the CDC merge (idempotent per batch id). 100 TB:
-    the store is fingerprints only (append-only, bucketed by hash); a
-    day's batch never joins more than |store ∩ batch| + |batch| rows.
+    ``tests/test_streaming.py`` pins. 100 TB: the store is fingerprints
+    only (append-only, bucketed by hash); a day's batch never joins more
+    than |store ∩ batch| + |batch| rows.
     """
     from ds_mapreduce_spark.functions.text import portable_fingerprint
 
@@ -431,24 +421,13 @@ def run_streaming_incremental_dedup(
         history.select(portable_fingerprint(F.col("text")).alias("text_md5"))
         .distinct()
     )
-    hist_fp.write.mode("overwrite").parquet(f"{state_dir}/v-1")
+    stream = _source(spark, batch_dir, per_file=True)
 
-    schema = spark.read.parquet(batch_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(batch_dir)
-    )
-    last = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        store = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+    def step(batch: DataFrame, prev) -> dict:
+        store = prev("fps")
         # same reduction as operators.dedup.incremental_dedup, but the
         # history side is already a fingerprint store (hashes, not text)
-        from pyspark.sql import Window
-
-        b = batch_df.select(
+        b = batch.select(
             "doc_id", portable_fingerprint(F.col("text")).alias("text_md5")
         )
         w = Window.partitionBy("text_md5")
@@ -462,32 +441,16 @@ def run_streaming_incremental_dedup(
             .otherwise("new")
         )
         out = joined.select("doc_id", "text_md5", verdict.alias("verdict"))
-        out.write.mode("overwrite").parquet(f"{state_dir}/verdicts_v{batch_id}")
         new_hashes = out.where(F.col("verdict") == "new").select("text_md5")
-        store.select("text_md5").unionByName(new_hashes).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/v{batch_id}")
-        last[0] = max(last[0], batch_id)
+        return {
+            "verdicts": out,
+            "fps": store.select("text_md5").unionByName(new_hashes).distinct(),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="verdicts_v")
-    if last[0] >= 0:
-        versions = [v for v in versions if v <= last[0]]
-    if not versions:  # empty feed, no prior verdicts: empty schema
-        return spark.createDataFrame([], schema).select(
-            "doc_id",
-            portable_fingerprint(F.col("text")).alias("text_md5"),
-            F.lit("new").alias("verdict"),
-        )
-    return spark.read.parquet(
-        *[f"{state_dir}/verdicts_v{i}" for i in versions]
+    versions = _fold(stream, state_dir, checkpoint_dir, step, seed={"fps": hist_fp})
+    return _union(
+        spark, state_dir, versions, "verdicts",
+        "doc_id bigint, text_md5 string, verdict string",
     )
 
 
@@ -503,8 +466,8 @@ def run_streaming_shard_plan(
     from the accumulated token total — the ingest-time twin of the batch
     ``corpus_shard_plan`` query. Within a batch the assignment is the
     same ``prefix_sum_over_total_order`` operator (md5 order); the
-    carried offset chains through versioned 1-row parquet state
-    (idempotent per batch id, like the CDC merge). When arrival chunks
+    carried offset is a 1-row state table seeded with 0, and the answer
+    is the union of the per-batch assignment logs. When arrival chunks
     respect the global md5 order, assignments equal the one-shot batch
     plan exactly — the invariant tests/test_streaming.py pins.
 
@@ -515,21 +478,11 @@ def run_streaming_shard_plan(
     from ds_mapreduce_spark.functions.text import tokens
     from ds_mapreduce_spark.operators.relational import prefix_sum_over_total_order
 
-    spark.createDataFrame([(0,)], "carried bigint").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1"
-    )
-    schema = spark.read.parquet(batch_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(batch_dir)
-    )
-    last = [-1]
+    stream = _source(spark, batch_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        carried = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-        base = batch_df.select(
+    def step(batch: DataFrame, prev) -> dict:
+        carried = prev("carried")
+        base = batch.select(
             "doc_id",
             F.md5(F.col("doc_id").cast("string")).alias("__key"),
             F.size(tokens(F.col("text"))).cast("bigint").alias("n_tok"),
@@ -545,35 +498,22 @@ def run_streaming_shard_plan(
             )
             .select("doc_id", "n_tok", "shard_id")
         )
-        assigned.write.mode("overwrite").parquet(f"{state_dir}/assign_v{batch_id}")
-        new_total = (
-            sess.read.parquet(f"{state_dir}/assign_v{batch_id}")
-            .agg((F.sum("n_tok")).cast("bigint").alias("b"))
-            .crossJoin(F.broadcast(carried))
-            .select((F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried"))
-        )
-        new_total.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last[0] = max(last[0], batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="assign_v")
-    if last[0] >= 0:
-        versions = [v for v in versions if v <= last[0]]
-    if not versions:  # empty feed, no prior assignments: empty schema
-        return spark.createDataFrame([], schema).select(
-            "doc_id",
-            F.lit(0).cast("bigint").alias("n_tok"),
-            F.lit(0).cast("bigint").alias("shard_id"),
-        )
-    return spark.read.parquet(
-        *[f"{state_dir}/assign_v{i}" for i in versions]
+        def total(cur) -> DataFrame:
+            return (
+                cur("assign")
+                .agg((F.sum("n_tok")).cast("bigint").alias("b"))
+                .crossJoin(F.broadcast(carried))
+                .select((F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried"))
+            )
+
+        return {"assign": assigned, "carried": total}
+
+    seed = {"carried": spark.createDataFrame([(0,)], "carried bigint")}
+    versions = _fold(stream, state_dir, checkpoint_dir, step, seed=seed)
+    return _union(
+        spark, state_dir, versions, "assign",
+        "doc_id bigint, n_tok bigint, shard_id bigint",
     )
 
 
@@ -585,53 +525,21 @@ def run_streaming_mv_maintenance(
     ``foreachBatch`` — the same ``mv_partial``/``mv_merge`` the batch
     query (``incremental_agg_maintenance``) composes in one plan, so the
     maintained state converges to the batch answer under ANY chunking of
-    the feed (associative DECIMAL partials).
-
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) exactly like ``run_streaming_cdc_merge``: a
-    retried batch id rewrites its own version from its predecessor, so
-    the sink is idempotent on top of at-least-once delivery. Returns the
-    final MV through the shared ``mv_present`` projection. 100 TB: each
+    the feed (associative DECIMAL partials). Returns the final MV
+    through the shared ``mv_present`` projection. 100 TB: each
     micro-batch scans ONLY its delta and shuffles |groups| partial rows;
     the state store is group-cardinality-sized — the continuous-
     aggregate contract."""
     from ds_mapreduce_spark.operators.relational import mv_merge, mv_partial, mv_present
 
-    schema = spark.read.parquet(orders_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if orders_dir.endswith(".parquet"):
-        base, _, fname = orders_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        orders_dir = base
-    stream = reader.parquet(orders_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, orders_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = mv_partial(batch_df, ["o_orderpriority"], "o_totalprice")
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            merged = mv_merge(prev, part)
-        else:
-            merged = mv_merge(part)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        part = mv_partial(batch, ["o_orderpriority"], "o_totalprice")
+        return {"mv": mv_merge(prev("mv"), part) if prev else mv_merge(part)}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty MV schema
-        return mv_present(
-            mv_merge(mv_partial(spark.createDataFrame([], schema),
-                                ["o_orderpriority"], "o_totalprice"))
-        )
-    return mv_present(spark.read.parquet(f"{state_dir}/v{final}"))
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return mv_present(_last(stream, state_dir, versions, step)("mv"))
 
 
 def run_streaming_scd2(
@@ -647,9 +555,6 @@ def run_streaming_scd2(
     (dropping a compressed row is only safe if nothing ever lands
     between it and its predecessor).
 
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) like the CDC twin, so a retried batch id
-    rewrites its own version — idempotent on at-least-once delivery.
     The per-batch reduction (groupBy MAX per (user, s)) is associative
     and commutative, so any micro-batching of the input converges to
     the same state. 100 TB: each micro-batch shuffles |state ∩ batch
@@ -663,45 +568,15 @@ def run_streaming_scd2(
         scd2_versions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    feed = purchase_change_rows(stream)
-    last_version: list[int] = [-1]
+    feed = purchase_change_rows(_source(spark, events_dir, per_file=True))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        rows = batch_df
-        if batch_id > 0:
-            rows = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(rows)
-        state = rows.groupBy("user_id", "s").agg(F.max("cents").alias("cents"))
-        state.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        rows = batch if prev is None else prev("instants").unionByName(batch)
+        return {"instants": rows.groupBy("user_id", "s").agg(F.max("cents").alias("cents"))}
 
-    q = (
-        feed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty history schema
-        final_state = (
-            purchase_change_rows(normalize_events_ts(spark.createDataFrame([], schema)))
-            .groupBy("user_id", "s")
-            .agg(F.max("cents").alias("cents"))
-        )
-    else:
-        final_state = spark.read.parquet(f"{state_dir}/v{final}")
-    return scd2_versions(final_state, "user_id", "s", "cents")
+    versions = _fold(feed, state_dir, checkpoint_dir, step)
+    state = _last(feed, state_dir, versions, step)("instants")
+    return scd2_versions(state, "user_id", "s", "cents")
 
 
 def run_streaming_hourly_resample(
@@ -719,9 +594,6 @@ def run_streaming_hourly_resample(
     is exact, which an emit-as-you-go design could not do (a carried-
     forward value may change retroactively).
 
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) like the MV/SCD2 twins, so a retried batch
-    id rewrites its own version — idempotent on at-least-once delivery;
     (n, sum_cents) merge is associative+commutative, so any chunking of
     the feed converges to the batch rollup. 100 TB: each micro-batch
     shuffles |batch| rows into |users × active hours| state — the
@@ -732,49 +604,24 @@ def run_streaming_hourly_resample(
         resample_forward_fill,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    stream = _source(spark, events_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = hourly_cents_rollup(batch_df)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+    def step(batch: DataFrame, prev) -> dict:
+        part = hourly_cents_rollup(batch)
+        if prev:
             part = (
-                prev.unionByName(part)
+                prev("rollup")
+                .unionByName(part)
                 .groupBy("user_id", "h")
                 .agg(
                     F.sum("n").cast("bigint").alias("n"),
                     F.sum("sum_cents").cast("bigint").alias("sum_cents"),
                 )
             )
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        return {"rollup": part}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty grid schema
-        final_state = hourly_cents_rollup(
-            normalize_events_ts(spark.createDataFrame([], schema))
-        )
-    else:
-        final_state = spark.read.parquet(f"{state_dir}/v{final}")
-    return resample_forward_fill(final_state)
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return resample_forward_fill(_last(stream, state_dir, versions, step)("rollup"))
 
 
 def run_streaming_heavy_hitters(
@@ -786,12 +633,8 @@ def run_streaming_heavy_hitters(
     ``keycount_partial``/``keycount_merge`` the batch profile
     (``events_heavy_hitter_profile``) composes in one plan, so the
     maintained state converges to the batch answer under ANY chunking
-    of the feed (counts are associative). State is chained through
-    versioned parquet dirs (``v{batch_id}`` reads ``v{batch_id-1}``)
-    like ``run_streaming_mv_maintenance``: a retried batch id rewrites
-    its own version from its predecessor — idempotent on top of
-    at-least-once delivery. Returns the final top-10 through the
-    shared ``heavy_hitter_present`` projection. 100 TB: each
+    of the feed (counts are associative). Returns the final top-10
+    through the shared ``heavy_hitter_present`` projection. 100 TB: each
     micro-batch scans only its delta and shuffles |keys-in-batch|
     partial rows; the state store is key-cardinality-sized — the skew
     monitor you leave running NEXT to the pipeline it tunes."""
@@ -800,44 +643,15 @@ def run_streaming_heavy_hitters(
         keycount_merge,
         keycount_partial,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    stream = _source(spark, events_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = keycount_partial(batch_df)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            merged = keycount_merge(prev, part)
-        else:
-            merged = keycount_merge(part)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        part = keycount_partial(batch)
+        return {"counts": keycount_merge(prev("counts"), part) if prev else keycount_merge(part)}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state (ADVICE r6): empty top-k
-        return heavy_hitter_present(
-            keycount_merge(keycount_partial(
-                normalize_events_ts(spark.createDataFrame([], schema))
-            ))
-        )
-    return heavy_hitter_present(spark.read.parquet(f"{state_dir}/v{final}"))
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return heavy_hitter_present(_last(stream, state_dir, versions, step)("counts"))
 
 
 def run_streaming_cms_sketch(
@@ -861,10 +675,7 @@ def run_streaming_cms_sketch(
     deployment reads its probe keys from whatever candidate tracker it
     runs beside the sketch. The final answer derives ENTIRELY from
     landed state through the shared ``cms_probe_estimates`` scoring
-    tail. State chains through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``): a retried batch id rewrites its own
-    version from its predecessor — idempotent on at-least-once
-    delivery. 100 TB: each micro-batch shuffles at most 1024 sketch
+    tail. 100 TB: each micro-batch shuffles at most 1024 sketch
     partial rows plus |keys-in-batch| count partials; the sketch merge
     cost is a constant regardless of stream size."""
     from ds_mapreduce_spark.operators.skew import (
@@ -876,50 +687,23 @@ def run_streaming_cms_sketch(
         cms_merge,
         cms_probe_estimates,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    stream = _source(spark, events_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sketch = cms_counters(batch_df, depth=4, width=256)
-        counts = keycount_partial(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            sketch = cms_merge(sess.read.parquet(f"{prev}/sketch"), sketch)
-            counts = keycount_merge(sess.read.parquet(f"{prev}/counts"), counts)
-        else:
-            sketch = cms_merge(sketch)
-            counts = keycount_merge(counts)
-        cur = f"{state_dir}/v{batch_id}"
-        sketch.write.mode("overwrite").parquet(f"{cur}/sketch")
-        counts.write.mode("overwrite").parquet(f"{cur}/counts")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        sketch = cms_counters(batch, depth=4, width=256)
+        counts = keycount_partial(batch)
+        if prev is None:
+            return {"sketch": cms_merge(sketch), "counts": keycount_merge(counts)}
+        return {
+            "sketch": cms_merge(prev("sketch"), sketch),
+            "counts": keycount_merge(prev("counts"), counts),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result, same schema
-        empty = normalize_events_ts(spark.createDataFrame([], schema))
-        return cms_probe_estimates(
-            cms_counters(empty), keycount_partial(empty).limit(0)
-        )
-    sketch = spark.read.parquet(f"{state_dir}/v{final}/sketch")
-    counts = spark.read.parquet(f"{state_dir}/v{final}/counts")
-    top = counts.orderBy(F.col("n_events").desc(), "user_id").limit(10)
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    sketch = state("sketch")
+    top = state("counts").orderBy(F.col("n_events").desc(), "user_id").limit(10)
     return cms_probe_estimates(sketch, top, depth=4, width=256)
 
 
@@ -941,10 +725,7 @@ def run_streaming_quantile_sketch(
     same trick as ``run_streaming_robust_outliers``) so the twin
     reproduces the batch answer (estimate bounds, exact value,
     containment guarantee) end-to-end through the shared
-    ``qsketch_estimates_from_state`` tail. State chains through
-    versioned parquet dirs (``v{batch_id}`` reads ``v{batch_id-1}``):
-    a retried batch id rewrites its own version from its predecessor —
-    idempotent on at-least-once delivery. 100 TB: each micro-batch
+    ``qsketch_estimates_from_state`` tail. 100 TB: each micro-batch
     shuffles at most |buckets-in-batch| sketch partials plus the
     batch's distinct (type, cents) pairs; the sketch merge cost is a
     per-type constant regardless of stream size."""
@@ -955,53 +736,22 @@ def run_streaming_quantile_sketch(
         type_cents_counts,
         type_cents_merge,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    stream = _source(spark, events_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sketch = qsketch_counters(batch_df)
-        vcounts = type_cents_counts(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            sketch = qsketch_merge(sess.read.parquet(f"{prev}/sketch"), sketch)
-            vcounts = type_cents_merge(
-                sess.read.parquet(f"{prev}/vcounts"), vcounts
-            )
-        else:
-            sketch = qsketch_merge(sketch)
-            vcounts = type_cents_merge(vcounts)
-        cur = f"{state_dir}/v{batch_id}"
-        sketch.write.mode("overwrite").parquet(f"{cur}/sketch")
-        vcounts.write.mode("overwrite").parquet(f"{cur}/vcounts")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        sketch = qsketch_counters(batch)
+        vcounts = type_cents_counts(batch)
+        if prev is None:
+            return {"sketch": qsketch_merge(sketch), "vcounts": type_cents_merge(vcounts)}
+        return {
+            "sketch": qsketch_merge(prev("sketch"), sketch),
+            "vcounts": type_cents_merge(prev("vcounts"), vcounts),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result schema
-        empty = normalize_events_ts(spark.createDataFrame([], schema))
-        return qsketch_estimates_from_state(
-            qsketch_counters(empty), type_cents_counts(empty)
-        )
-    return qsketch_estimates_from_state(
-        spark.read.parquet(f"{state_dir}/v{final}/sketch"),
-        spark.read.parquet(f"{state_dir}/v{final}/vcounts"),
-    )
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    return qsketch_estimates_from_state(state("sketch"), state("vcounts"))
 
 
 def run_streaming_hll_rollup(
@@ -1022,9 +772,6 @@ def run_streaming_hll_rollup(
     (key-cardinality-sized — the evaluation side, not the production
     state). The final answer derives entirely from landed state through
     the shared ``hll_rollup_from_pgs``/``hll_rollup_present`` tail.
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery.
     100 TB: per batch the work is the batch's group partials plus a
     group-cardinality-sized sketch union — the fact table is never
     re-read; a year of dailies rolls up by unioning 365 sketch rows
@@ -1036,67 +783,34 @@ def run_streaming_hll_rollup(
         hll_rollup_present,
     )
 
-    schema = spark.read.parquet(orders_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if orders_dir.endswith(".parquet"):
-        base, _, fname = orders_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        orders_dir = base
-    stream = reader.parquet(orders_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, orders_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        pgs = hll_pgs_partial(batch_df)
-        pri = batch_df.groupBy("o_orderpriority").agg(
+    def step(batch: DataFrame, prev) -> dict:
+        pgs = hll_pgs_partial(batch)
+        pri = batch.groupBy("o_orderpriority").agg(
             F.hll_sketch_agg("o_custkey").alias("sk")
         )
-        custs = batch_df.select("o_orderpriority", "o_custkey").distinct()
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            pgs = hll_pgs_merge(sess.read.parquet(f"{prev}/pgs"), pgs)
-            pri = (
-                sess.read.parquet(f"{prev}/pri")
-                .unionByName(pri)
-                .groupBy("o_orderpriority")
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-            custs = (
-                sess.read.parquet(f"{prev}/custs").unionByName(custs).distinct()
-            )
-        else:
-            pgs = hll_pgs_merge(pgs)
-        cur = f"{state_dir}/v{batch_id}"
-        pgs.write.mode("overwrite").parquet(f"{cur}/pgs")
-        pri.write.mode("overwrite").parquet(f"{cur}/pri")
-        custs.write.mode("overwrite").parquet(f"{cur}/custs")
-        last_version[0] = max(last_version[0], batch_id)
+        custs = batch.select("o_orderpriority", "o_custkey").distinct()
+        if prev is None:
+            return {"pgs": hll_pgs_merge(pgs), "pri": pri, "custs": custs}
+        return {
+            "pgs": hll_pgs_merge(prev("pgs"), pgs),
+            "pri": prev("pri")
+            .unionByName(pri)
+            .groupBy("o_orderpriority")
+            .agg(F.hll_union_agg("sk").alias("sk")),
+            "custs": prev("custs").unionByName(custs).distinct(),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result schema
-        empty = spark.createDataFrame([], schema)
-        direct = empty.groupBy("o_orderpriority").agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("o_custkey")).alias("__direct"),
-            F.countDistinct("o_custkey").cast("bigint").alias("exact_custs"),
-        )
-        return hll_rollup_present(
-            hll_rollup_from_pgs(hll_pgs_partial(empty)), direct
-        )
-    rolled = hll_rollup_from_pgs(spark.read.parquet(f"{state_dir}/v{final}/pgs"))
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    rolled = hll_rollup_from_pgs(state("pgs"))
     direct = (
-        spark.read.parquet(f"{state_dir}/v{final}/pri")
+        state("pri")
         .groupBy("o_orderpriority")
         .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__direct"))
         .join(
-            spark.read.parquet(f"{state_dir}/v{final}/custs")
+            state("custs")
             .groupBy("o_orderpriority")
             .agg(
                 F.countDistinct("o_custkey").cast("bigint").alias("exact_custs")
@@ -1124,47 +838,23 @@ def run_streaming_priority_sample(
     pass + a TakeOrdered(k); state never exceeds k rows no matter how
     long the stream runs — the sampling sibling of the CMS twin's
     constant-size sketch. The final answer derives from landed state
-    through the shared ``priority_sample_present`` tail. State chains
-    through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery."""
+    through the shared ``priority_sample_present`` tail."""
     from ds_mapreduce_spark.plans.text_queries import (
         priority_sample_present,
         priority_scores,
         priority_top_k,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        top = priority_top_k(priority_scores(batch_df), 50)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            top = priority_top_k(prev.unionByName(top), 50)
-        top.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        top = priority_top_k(priority_scores(batch), 50)
+        if prev:
+            top = priority_top_k(prev("sample").unionByName(top), 50)
+        return {"sample": top}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty sample schema
-        empty = spark.createDataFrame([], schema)
-        return priority_sample_present(priority_top_k(priority_scores(empty)))
-    return priority_sample_present(spark.read.parquet(f"{state_dir}/v{final}"))
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return priority_sample_present(_last(stream, state_dir, versions, step)("sample"))
 
 
 def run_streaming_bm25_index(
@@ -1193,17 +883,10 @@ def run_streaming_bm25_index(
     the invariant tests/test_streaming.py pins (chunked + shuffled
     feed vs the batch bm25_search top-20).
 
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``) like the sibling twins: a retried batch id
-    rewrites its own version from its predecessor — idempotent on
-    at-least-once delivery; resume-with-nothing-new and the empty feed
-    take the landed/empty paths via ``_resolve_final_version``. 100 TB:
-    each micro-batch tokenizes only its delta and shuffles |delta
-    postings| rows; postings/dfreq state is bucketed by token in a real
-    deployment so the merge is shuffle-free; the per-query probe cost
-    is posting-list-sized."""
-    from pyspark.sql import Window
-
+    100 TB: each micro-batch tokenizes only its delta and shuffles
+    |delta postings| rows; postings/dfreq state is bucketed by token in
+    a real deployment so the merge is shuffle-free; the per-query probe
+    cost is posting-list-sized."""
     from ds_mapreduce_spark.operators.search import (
         bm25_corpus_stats_partial,
         bm25_dfreq_partial,
@@ -1212,70 +895,37 @@ def run_streaming_bm25_index(
         bm25_scores_from_index,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        post = bm25_postings_partial(batch_df)
-        dl = bm25_docstats_partial(batch_df)
+    def step(batch: DataFrame, prev) -> dict:
+        post = bm25_postings_partial(batch)
+        dl = bm25_docstats_partial(batch)
         dfreq = bm25_dfreq_partial(post)
         stats = bm25_corpus_stats_partial(dl)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            post = sess.read.parquet(f"{prev}/postings").unionByName(post)
-            dl = sess.read.parquet(f"{prev}/dl").unionByName(dl)
+        if prev:
+            post = prev("postings").unionByName(post)
+            dl = prev("dl").unionByName(dl)
             dfreq = (
-                sess.read.parquet(f"{prev}/dfreq")
+                prev("dfreq")
                 .unionByName(dfreq)
                 .groupBy("tok")
                 .agg(F.sum("dft").cast("bigint").alias("dft"))
             )
             stats = (
-                sess.read.parquet(f"{prev}/stats")
+                prev("stats")
                 .unionByName(stats)
                 .agg(
                     F.sum("d").cast("bigint").alias("d"),
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
                 )
             )
-        cur = f"{state_dir}/v{batch_id}"
-        post.write.mode("overwrite").parquet(f"{cur}/postings")
-        dl.write.mode("overwrite").parquet(f"{cur}/dl")
-        dfreq.write.mode("overwrite").parquet(f"{cur}/dfreq")
-        stats.write.mode("overwrite").parquet(f"{cur}/stats")
-        last_version[0] = max(last_version[0], batch_id)
+        return {"postings": post, "dl": dl, "dfreq": dfreq, "stats": stats}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    agg = bm25_scores_from_index(
+        state("postings"), state("dl"), state("dfreq"), state("stats")
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty index
-        empty = spark.createDataFrame([], schema)
-        post = bm25_postings_partial(empty)
-        dl = bm25_docstats_partial(empty)
-        agg = bm25_scores_from_index(
-            post, dl, bm25_dfreq_partial(post), bm25_corpus_stats_partial(dl)
-        )
-    else:
-        cur = f"{state_dir}/v{final}"
-        agg = bm25_scores_from_index(
-            spark.read.parquet(f"{cur}/postings"),
-            spark.read.parquet(f"{cur}/dl"),
-            spark.read.parquet(f"{cur}/dfreq"),
-            spark.read.parquet(f"{cur}/stats"),
-        )
     # same bounded presentation as the batch query: TakeOrdered(20)
     # first, rank window on <=20 rows
     top = agg.orderBy(F.col("bm25_scaled").desc(), "doc_id").limit(20)
@@ -1295,58 +945,30 @@ def run_streaming_robust_outliers(
     final exact median/MAD/outlier derivation
     (``robust_census_from_counts``) is a pure function of that state —
     so ANY chunking or arrival order of the feed reproduces the batch
-    answer bit-for-bit, which the equivalence test pins. State chains
-    through versioned parquet dirs like the sibling twins (idempotent
-    per batch id on at-least-once delivery; resume/empty-feed via
-    ``_resolve_final_version``). 100 TB: per batch, |delta histogram|
-    rows shuffle; state is Σ per-user distinct cents — bounded by the
-    value domain (money quantized to cents), the explicit trade
-    against an O(1)-state approximate sketch."""
+    answer bit-for-bit, which the equivalence test pins. 100 TB: per
+    batch, |delta histogram| rows shuffle; state is Σ per-user distinct
+    cents — bounded by the value domain (money quantized to cents), the
+    explicit trade against an O(1)-state approximate sketch."""
     from ds_mapreduce_spark.operators.robust import (
         robust_census_from_counts,
         user_cents_counts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    stream = _source(spark, events_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = user_cents_counts(batch_df)
-        if batch_id > 0:
+    def step(batch: DataFrame, prev) -> dict:
+        part = user_cents_counts(batch)
+        if prev:
             part = (
-                sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+                prev("counts")
                 .unionByName(part)
                 .groupBy("user_id", "cents")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        return {"counts": part}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty census
-        counts = user_cents_counts(
-            normalize_events_ts(spark.createDataFrame([], schema))
-        )
-    else:
-        counts = spark.read.parquet(f"{state_dir}/v{final}")
-    return robust_census_from_counts(counts)
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return robust_census_from_counts(_last(stream, state_dir, versions, step)("counts"))
 
 
 def run_streaming_minhash_lsh(
@@ -1366,12 +988,10 @@ def run_streaming_minhash_lsh(
     collisions: within-batch bucket pairs (``lsh_band_pairs`` on the
     batch signatures) plus batch x landed-index joins on (band,
     band_key). A pair (a, b) is found when its LATER member arrives —
-    so the UNION of per-batch pair sets over any chunking equals the
+    so the UNION of per-batch pair logs over any chunking equals the
     one-shot batch ``dedup_minhash_lsh`` pair set exactly, the
     invariant the equivalence test pins (normalized doc_a < doc_b,
-    distinct at the final read; per-batch pair files are the append
-    log, idempotent per batch id like the verdict log of the
-    incremental-dedup twin).
+    distinct at the final read).
 
     100 TB: per batch the work is |batch bands| map-side rows plus a
     join keyed on (band, band_key) against the index — posting-list
@@ -1385,57 +1005,33 @@ def run_streaming_minhash_lsh(
     )
 
     num_hashes, band_size = 8, 2
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sig = minhash_signatures(batch_df, k=3, num_hashes=num_hashes)
+    def step(batch: DataFrame, prev) -> dict:
+        sig = minhash_signatures(batch, k=3, num_hashes=num_hashes)
         bands_new = lsh_bands(sig, num_hashes, band_size).localCheckpoint(eager=True)
         # within-batch pairs from the SAME checkpointed band table that
         # appends into the index: one signature pipeline per batch
         within = lsh_bucket_pairs(bands_new)
-        if batch_id > 0:
-            index = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            hit = bands_new.join(
-                index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
-            )
-            cross = hit.select(
-                F.least("doc_id", "doc_old").alias("doc_a"),
-                F.greatest("doc_id", "doc_old").alias("doc_b"),
-            )
-            pairs = within.unionByName(cross).distinct()
-            merged = index.unionByName(bands_new)
-        else:
-            pairs = within
-            merged = bands_new
-        pairs.write.mode("overwrite").parquet(f"{state_dir}/pairs_v{batch_id}")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        if prev is None:
+            return {"pairs": within, "index": bands_new}
+        index = prev("index")
+        hit = bands_new.join(
+            index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
+        )
+        cross = hit.select(
+            F.least("doc_id", "doc_old").alias("doc_a"),
+            F.greatest("doc_id", "doc_old").alias("doc_b"),
+        )
+        return {
+            "pairs": within.unionByName(cross).distinct(),
+            "index": index.unionByName(bands_new),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="pairs_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed, no prior pairs: empty pair schema
-        return spark.createDataFrame([], "doc_a bigint, doc_b bigint")
-    return (
-        spark.read.parquet(*[f"{state_dir}/pairs_v{i}" for i in versions])
-        .distinct()
-    )
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return _union(
+        spark, state_dir, versions, "pairs", "doc_a bigint, doc_b bigint"
+    ).distinct()
 
 
 def run_streaming_connected_components(
@@ -1465,17 +1061,15 @@ def run_streaming_connected_components(
     Per batch: candidate pairs are the batch docs' bucket collisions
     (within-batch + batch x landed index, found when the LATER member
     arrives — union over any chunking = the one-shot LSH pair set),
-    verified through the shared ``jaccard_verify_pairs`` arithmetic,
-    and folded into the partition COMPONENT-LOCALLY: only components
-    touched by a new edge endpoint are re-solved (their landed labels
-    re-enter as star edges id->comp, which preserve node sets,
-    connectivity, and min-id canonicality), untouched components pass
-    through unread. CC(star(CC(E1)) u E2) = CC(E1 u E2) — the
-    associativity that makes min-id labels a mergeable state, pinned by
-    the equivalence test under a 4-way-chunked feed. State chains
-    through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery.
+    verified through the shared ``jaccard_verify_pairs`` arithmetic
+    against the profiles just landed, and folded into the partition
+    COMPONENT-LOCALLY: only components touched by a new edge endpoint
+    are re-solved (their landed labels re-enter as star edges id->comp,
+    which preserve node sets, connectivity, and min-id canonicality),
+    untouched components pass through unread. CC(star(CC(E1)) u E2) =
+    CC(E1 u E2) — the associativity that makes min-id labels a
+    mergeable state, pinned by the equivalence test under a
+    4-way-chunked feed.
 
     100 TB: per batch the work is |batch bands| probe rows against a
     band_key-bucketed index, a posting-list-sized verify join, and a
@@ -1495,27 +1089,18 @@ def run_streaming_connected_components(
     )
 
     k, num_hashes, band_size, threshold = 3, 8, 2, 0.8
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sig = minhash_signatures(batch_df, k=k, num_hashes=num_hashes)
+    def step(batch: DataFrame, prev) -> dict:
+        sig = minhash_signatures(batch, k=k, num_hashes=num_hashes)
         bands_new = lsh_bands(sig, num_hashes, band_size).localCheckpoint(eager=True)
-        prof_new = shingle_profiles(batch_df, k).select(
-            "doc_id", "sh", "n_shingles"
-        )
+        prof_new = shingle_profiles(batch, k).select("doc_id", "sh", "n_shingles")
         within = lsh_bucket_pairs(bands_new)
-        cur = f"{state_dir}/v{batch_id}"
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            index = sess.read.parquet(f"{prev}/bands")
+        if prev is None:
+            pairs, bands, profiles = within, bands_new, prof_new
+            prev_labels = batch.sparkSession.createDataFrame([], "id bigint, comp bigint")
+        else:
+            index = prev("bands")
             hit = bands_new.join(
                 index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
             )
@@ -1524,46 +1109,27 @@ def run_streaming_connected_components(
                 F.greatest("doc_id", "doc_old").alias("doc_b"),
             )
             pairs = within.unionByName(cross).distinct()
-            index.unionByName(bands_new).write.mode("overwrite").parquet(
-                f"{cur}/bands"
-            )
-            sess.read.parquet(f"{prev}/profiles").unionByName(
-                prof_new
-            ).write.mode("overwrite").parquet(f"{cur}/profiles")
-            prev_labels = sess.read.parquet(f"{prev}/labels")
-        else:
-            pairs = within
-            bands_new.write.mode("overwrite").parquet(f"{cur}/bands")
-            prof_new.write.mode("overwrite").parquet(f"{cur}/profiles")
-            prev_labels = sess.createDataFrame([], "id bigint, comp bigint")
-        profiles = sess.read.parquet(f"{cur}/profiles")
-        edges = (
-            jaccard_verify_pairs(pairs, profiles, threshold)
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        )
-        # component-local fold: re-solve ONLY components a new edge
-        # touches; untouched labels pass through unread (cc_fold —
-        # the algebra is property-tested against union-find)
-        cc_fold(prev_labels, edges).write.mode("overwrite").parquet(
-            f"{cur}/labels"
-        )
-        last_version[0] = max(last_version[0], batch_id)
+            bands = index.unionByName(bands_new)
+            profiles = prev("profiles").unionByName(prof_new)
+            prev_labels = prev("labels")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty label schema
-        return spark.createDataFrame([], "doc_id bigint, comp_id bigint")
-    return spark.read.parquet(f"{state_dir}/v{final}/labels").select(
-        F.col("id").alias("doc_id"), F.col("comp").alias("comp_id")
-    )
+        def labels(cur) -> DataFrame:
+            edges = (
+                jaccard_verify_pairs(pairs, cur("profiles"), threshold)
+                .select("doc_a", "doc_b")
+                .localCheckpoint(eager=True)
+            )
+            # component-local fold: re-solve ONLY components a new edge
+            # touches; untouched labels pass through unread (cc_fold —
+            # the algebra is property-tested against union-find)
+            return cc_fold(prev_labels, edges)
+
+        return {"bands": bands, "profiles": profiles, "labels": labels}
+
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return _union(
+        spark, state_dir, versions[-1:], "labels", "id bigint, comp bigint"
+    ).select(F.col("id").alias("doc_id"), F.col("comp").alias("comp_id"))
 
 
 def run_streaming_pmi_counts(
@@ -1582,12 +1148,6 @@ def run_streaming_pmi_counts(
     to the partials: a pair seen 3 + 2 times across two batches must
     clear the floor after the merge).
 
-    State is chained through versioned parquet dirs
-    (``uni_v{batch_id}``/``big_v{batch_id}`` read their
-    ``{batch_id-1}`` predecessors) like ``run_streaming_heavy_hitters``
-    — a retried batch id rewrites its own version from its
-    predecessor, idempotent on top of at-least-once delivery.
-
     100 TB: each micro-batch scans only its delta and shuffles
     vocab/bigram-vocab-sized partials (hot tokens absorbed map-side);
     the state tables are key-cardinality-sized (Heaps' law), and the
@@ -1600,58 +1160,21 @@ def run_streaming_pmi_counts(
         pmi_unigram_partial,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        uni_part = pmi_unigram_partial(batch_df)
-        big_part = pmi_bigram_partial(batch_df)
-        if batch_id > 0:
-            uni = pmi_unigram_merge(
-                sess.read.parquet(f"{state_dir}/uni_v{batch_id - 1}"), uni_part
-            )
-            big = pmi_bigram_merge(
-                sess.read.parquet(f"{state_dir}/big_v{batch_id - 1}"), big_part
-            )
-        else:
-            uni = pmi_unigram_merge(uni_part)
-            big = pmi_bigram_merge(big_part)
-        uni.write.mode("overwrite").parquet(f"{state_dir}/uni_v{batch_id}")
-        big.write.mode("overwrite").parquet(f"{state_dir}/big_v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        uni = pmi_unigram_partial(batch)
+        big = pmi_bigram_partial(batch)
+        if prev is None:
+            return {"uni": pmi_unigram_merge(uni), "big": pmi_bigram_merge(big)}
+        return {
+            "uni": pmi_unigram_merge(prev("uni"), uni),
+            "big": pmi_bigram_merge(prev("big"), big),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    # _resolve_final_version semantics under this job's uni_v/big_v
-    # naming: the max batch id that fired, else the latest landed
-    # version from a previous run, else None
-    if last_version[0] >= 0:
-        final: int | None = last_version[0]
-    else:
-        landed = existing_state_versions(spark, state_dir, prefix="uni_v")
-        final = landed[-1] if landed else None
-    if final is None:  # empty feed, no prior state: empty top-k shape
-        empty = spark.createDataFrame([], schema)
-        return pmi_topk_from_counts(
-            pmi_unigram_partial(empty), pmi_bigram_partial(empty)
-        )
-    return pmi_topk_from_counts(
-        spark.read.parquet(f"{state_dir}/uni_v{final}"),
-        spark.read.parquet(f"{state_dir}/big_v{final}"),
-    )
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    return pmi_topk_from_counts(state("uni"), state("big"))
 
 
 def run_streaming_winnow_screen(
@@ -1677,7 +1200,7 @@ def run_streaming_winnow_screen(
     WITHIN the batch and (b) batch fps hitting the landed index —
     and a hit flags BOTH members, retro-flagging the earlier doc the
     way `run_streaming_minhash_lsh` emits a pair when its LATER
-    member arrives. The union of per-batch flag emissions over any
+    member arrives. The union of per-batch flag logs over any
     chunking therefore equals the one-shot batch screen
     (`winnow_flagged_docs`: fp census count >= 2) EXACTLY — the
     invariant `tests/test_streaming.py` pins.
@@ -1691,18 +1214,10 @@ def run_streaming_winnow_screen(
     from ds_mapreduce_spark.operators.dedup import winnowing_fingerprints
 
     w = L - k + 1
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fps_new = winnowing_fingerprints(batch_df, k=k, w=w).localCheckpoint(
+    def step(batch: DataFrame, prev) -> dict:
+        fps_new = winnowing_fingerprints(batch, k=k, w=w).localCheckpoint(
             eager=True
         )
         # within-batch collisions: distinct (doc, fp) rows, so a count
@@ -1715,42 +1230,19 @@ def run_streaming_winnow_screen(
         within = fps_new.join(dup_fp.select("fp"), "fp", "left_semi").select(
             "doc_id"
         )
-        if batch_id > 0:
-            index = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            hit = fps_new.join(
-                index.withColumnRenamed("doc_id", "doc_old"), "fp"
-            )
-            flagged = (
-                within.unionByName(hit.select("doc_id"))
-                .unionByName(hit.select(F.col("doc_old").alias("doc_id")))
-                .distinct()
-            )
-            merged = index.unionByName(fps_new)
-        else:
-            flagged = within.distinct()
-            merged = fps_new
-        flagged.write.mode("overwrite").parquet(
-            f"{state_dir}/flagged_v{batch_id}"
+        if prev is None:
+            return {"flagged": within.distinct(), "index": fps_new}
+        index = prev("index")
+        hit = fps_new.join(index.withColumnRenamed("doc_id", "doc_old"), "fp")
+        flagged = (
+            within.unionByName(hit.select("doc_id"))
+            .unionByName(hit.select(F.col("doc_old").alias("doc_id")))
+            .distinct()
         )
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        return {"flagged": flagged, "index": index.unionByName(fps_new)}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="flagged_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed: empty flag set with the right schema
-        return spark.createDataFrame([], "doc_id bigint")
-    return spark.read.parquet(
-        *[f"{state_dir}/flagged_v{i}" for i in versions]
-    ).distinct()
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return _union(spark, state_dir, versions, "flagged", "doc_id bigint").distinct()
 
 
 def run_streaming_ingest_manifest(
@@ -1766,8 +1258,9 @@ def run_streaming_ingest_manifest(
     micro-batch is scrubbed, quality-gated, deduped against the
     accumulated kept-fingerprint store, and its kept docs are routed
     into token-budget shards continuing from the carried offset. Two
-    state tables (kept fps; 1-row carried token total), one appended
-    manifest log — the decision record per document, written once.
+    state tables (kept fps; 1-row carried token total, both seeded in
+    ``v-1``), one appended manifest log — the decision record per
+    document, written once.
 
     Shared code: the per-doc stage is ``operators.ingest.scored_rows``
     verbatim (map-only, slice-able); ownership and routing both walk
@@ -1779,39 +1272,19 @@ def run_streaming_ingest_manifest(
     the kept SET per fingerprint is still one doc and shard fills
     remain budget-bounded, only ownership/routing identity shifts
     with arrival (documented, same as the incremental-dedup twin's
-    dup_of_history note). State chains through versioned parquet dirs
-    (idempotent per batch id); resume/empty-feed via the shared
-    guards. 100 TB: per batch the work is |batch| map-only rows, one
-    |batch fp| probe of the store, and a batch-local prefix sum — the
-    corpus is never rescanned."""
+    dup_of_history note). 100 TB: per batch the work is |batch|
+    map-only rows, one |batch fp| probe of the store, and a
+    batch-local prefix sum — the corpus is never rescanned."""
     from ds_mapreduce_spark.operators.ingest import scored_rows
     from ds_mapreduce_spark.operators.relational import prefix_sum_over_total_order
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    spark.createDataFrame([(0,)], "carried bigint").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1/carried"
-    )
-    spark.createDataFrame([], "fp string").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1/fps"
-    )
+    def step(batch: DataFrame, prev) -> dict:
+        store = prev("fps")
+        carried = prev("carried")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        sess = batch_df.sparkSession
-        prev = f"{state_dir}/v{batch_id - 1}"
-        store = sess.read.parquet(f"{prev}/fps")
-        carried = sess.read.parquet(f"{prev}/carried")
-
-        scored = scored_rows(batch_df).localCheckpoint(eager=True)
+        scored = scored_rows(batch).localCheckpoint(eager=True)
         qual = scored.where(F.col("q") >= F.lit(quality_threshold))
         fresh = qual.join(store, "fp", "left_anti")
         wfp = Window.partitionBy("fp").orderBy("okey", "doc_id")
@@ -1847,40 +1320,32 @@ def run_streaming_ingest_manifest(
                 .alias("shard_id"),
             )
         )
-        cur = f"{state_dir}/v{batch_id}"
-        manifest.write.mode("overwrite").parquet(f"{state_dir}/manifest_v{batch_id}")
-        store.unionByName(owner.select("fp")).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{cur}/fps")
-        new_total = (
-            sess.read.parquet(f"{state_dir}/manifest_v{batch_id}")
-            .where(F.col("verdict") == "kept")
-            .agg(F.sum("n_tok").cast("bigint").alias("b"))
-            .crossJoin(F.broadcast(carried))
-            .select(
-                (F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried")
-            )
-        )
-        new_total.write.mode("overwrite").parquet(f"{cur}/carried")
-        last_version[0] = max(last_version[0], batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="manifest_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed, no prior manifest: empty schema
-        return spark.createDataFrame(
-            [], "doc_id bigint, verdict string, n_tok bigint, shard_id bigint"
-        )
-    return spark.read.parquet(
-        *[f"{state_dir}/manifest_v{i}" for i in versions]
+        def total(cur) -> DataFrame:
+            return (
+                cur("manifest")
+                .where(F.col("verdict") == "kept")
+                .agg(F.sum("n_tok").cast("bigint").alias("b"))
+                .crossJoin(F.broadcast(carried))
+                .select(
+                    (F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried")
+                )
+            )
+
+        return {
+            "manifest": manifest,
+            "fps": store.unionByName(owner.select("fp")).distinct(),
+            "carried": total,
+        }
+
+    seed = {
+        "carried": spark.createDataFrame([(0,)], "carried bigint"),
+        "fps": spark.createDataFrame([], "fp string"),
+    }
+    versions = _fold(stream, state_dir, checkpoint_dir, step, seed=seed)
+    return _union(
+        spark, state_dir, versions, "manifest",
+        "doc_id bigint, verdict string, n_tok bigint, shard_id bigint",
     )
 
 
@@ -1907,47 +1372,23 @@ def run_streaming_ivf_index(
     ``ivf_topk`` probe the batch ``knn_ivf`` runs (assigned= the
     state), so any chunking of the feed reproduces the batch top-k
     exactly — assignment is per-vector against fixed centroids, so
-    order cannot matter; the equivalence test pins it. State chains
-    through versioned parquet dirs (idempotent per batch id);
-    resume/empty-feed via the shared guards. 100 TB: per batch the
-    work is |batch| x |centroids| broadcast scores; the index is
-    bucketed by centroid_id in a real deployment so a query touches
+    order cannot matter; the equivalence test pins it. 100 TB: per
+    batch the work is |batch| x |centroids| broadcast scores; the index
+    is bucketed by centroid_id in a real deployment so a query touches
     nprobe posting lists, never the corpus."""
     from ds_mapreduce_spark.operators.similarity import (
         assign_to_centroids,
         ivf_topk,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, emb_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = assign_to_centroids(batch_df, centroids)
-        if batch_id > 0:
-            part = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(part)
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        part = assign_to_centroids(batch, centroids)
+        return {"index": prev("index").unionByName(part) if prev else part}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior index
-        index = assign_to_centroids(spark.createDataFrame([], schema), centroids)
-    else:
-        index = spark.read.parquet(f"{state_dir}/v{final}")
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    index = _last(stream, state_dir, versions, step)("index")
     queries = index.where(F.col("vec_id") < n_queries).select("vec_id", "embedding")
     return ivf_topk(
         corpus=index, queries=queries, centroids=centroids,
@@ -1981,14 +1422,9 @@ def run_streaming_dsir_selection(
     corpus re-reads — re-scoring touches the profile sketch and a
     <=1024-row broadcast only.
 
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery;
-    resume-with-nothing-new and the empty feed take the landed/empty
-    paths via ``_resolve_final_version``. 100 TB: each micro-batch
-    tokenizes only its delta; the weight table stays <=1024 rows at
-    any scale; docprof is bucketed by doc_id in a real deployment so
-    the append is shuffle-free."""
+    100 TB: each micro-batch tokenizes only its delta; the weight table
+    stays <=1024 rows at any scale; docprof is bucketed by doc_id in a
+    real deployment so the append is shuffle-free."""
     from ds_mapreduce_spark.operators.importance import (
         dsir_bucket_merge,
         dsir_bucket_partial,
@@ -1997,51 +1433,20 @@ def run_streaming_dsir_selection(
         dsir_token_buckets,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tb = dsir_token_buckets(batch_df)
+    def step(batch: DataFrame, prev) -> dict:
+        tb = dsir_token_buckets(batch)
         bucketw = dsir_bucket_partial(tb)
         prof = dsir_docprof_partial(tb)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            bucketw = dsir_bucket_merge(
-                sess.read.parquet(f"{prev}/bucketw").unionByName(bucketw)
-            )
-            prof = sess.read.parquet(f"{prev}/docprof").unionByName(prof)
-        cur = f"{state_dir}/v{batch_id}"
-        bucketw.write.mode("overwrite").parquet(f"{cur}/bucketw")
-        prof.write.mode("overwrite").parquet(f"{cur}/docprof")
-        last_version[0] = max(last_version[0], batch_id)
+        if prev:
+            bucketw = dsir_bucket_merge(prev("bucketw").unionByName(bucketw))
+            prof = prev("docprof").unionByName(prof)
+        return {"bucketw": bucketw, "docprof": prof}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty selection
-        empty = spark.createDataFrame([], schema)
-        tb = dsir_token_buckets(empty)
-        return dsir_select_from_state(
-            dsir_docprof_partial(tb), dsir_bucket_partial(tb)
-        )
-    cur = f"{state_dir}/v{final}"
-    return dsir_select_from_state(
-        spark.read.parquet(f"{cur}/docprof"),
-        spark.read.parquet(f"{cur}/bucketw"),
-    )
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    state = _last(stream, state_dir, versions, step)
+    return dsir_select_from_state(state("docprof"), state("bucketw"))
 
 
 def run_streaming_pca_gramian(
@@ -2060,55 +1465,23 @@ def run_streaming_pca_gramian(
     converges to the batch answer exactly. This is the
     embedding-telemetry-at-ingest tier: anisotropy drift shows up per
     micro-batch without ever rescanning landed vectors, at dim^2 state
-    whatever the corpus size.
-
-    Versioned-state contract as the siblings: ``v{batch_id}`` reads
-    ``v{batch_id-1}`` (idempotent on at-least-once);
-    resume-with-nothing-new and the empty feed take the landed/empty
-    paths via ``_resolve_final_version``."""
+    whatever the corpus size."""
     from ds_mapreduce_spark.operators.similarity import (
         pca_gramian_merge,
         pca_gramian_partial,
         pca_power_from_gramian,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, emb_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        gram = pca_gramian_partial(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            gram = pca_gramian_merge(
-                sess.read.parquet(f"{prev}/gram").unionByName(gram)
-            )
-        cur = f"{state_dir}/v{batch_id}"
-        gram.write.mode("overwrite").parquet(f"{cur}/gram")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, prev) -> dict:
+        gram = pca_gramian_partial(batch)
+        if prev:
+            gram = pca_gramian_merge(prev("gram").unionByName(gram))
+        return {"gram": gram}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state
-        empty = spark.createDataFrame([], schema)
-        return pca_power_from_gramian(
-            pca_gramian_partial(empty).localCheckpoint(eager=True)
-        )
-    gram = spark.read.parquet(f"{state_dir}/v{final}/gram")
-    return pca_power_from_gramian(gram)
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return pca_power_from_gramian(_last(stream, state_dir, versions, step)("gram"))
 
 
 def run_streaming_kmeans_centroids(
@@ -2135,9 +1508,7 @@ def run_streaming_kmeans_centroids(
     pins it). This is how k-means actually trains on a 100 TB corpus:
     per-pass state is k×dim rows whatever the corpus size, each
     micro-batch scans only its delta, and successive passes re-run
-    the stream with the previous pass's output as the new seeds.
-    State chains through versioned parquet dirs (idempotent per batch
-    id); resume/empty-feed via the shared guards."""
+    the stream with the previous pass's output as the new seeds."""
     from ds_mapreduce_spark.operators.similarity import (
         lloyd_step_centroids,
         lloyd_step_merge,
@@ -2145,44 +1516,17 @@ def run_streaming_kmeans_centroids(
         quantize_embeddings,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    stream = _source(spark, emb_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = lloyd_step_partial(quantize_embeddings(batch_df, quant), seeds)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            part = lloyd_step_merge(prev, part)
+    def step(batch: DataFrame, prev) -> dict:
+        part = lloyd_step_partial(quantize_embeddings(batch, quant), seeds)
         # batch 0: the partial IS the state — lloyd_step_partial already
         # ends in the same groupBy(cid, i) aggregate lloyd_step_merge
         # would re-apply, so no merge wrapper is needed
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        return {"lloyd": lloyd_step_merge(prev("lloyd"), part) if prev else part}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: no members, no means
-        return lloyd_step_centroids(
-            lloyd_step_partial(
-                quantize_embeddings(spark.createDataFrame([], schema), quant),
-                seeds,
-            )
-        )
-    return lloyd_step_centroids(spark.read.parquet(f"{state_dir}/v{final}"))
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return lloyd_step_centroids(_last(stream, state_dir, versions, step)("lloyd"))
 
 
 def run_streaming_bpe_encode(
@@ -2201,33 +1545,25 @@ def run_streaming_bpe_encode(
     the same ``_merge_pair`` fold training applies), so each batch's
     per-doc census — computed by the SAME ``encode_census_rows`` tail
     the batch query uses — is independent of every other batch, and
-    the union over any chunking of the feed is bit-equal to the batch
-    ``bpe_encode_census`` whose training produced the rules (the
-    equivalence test pins it). Per batch: distinct-word segmentation
-    (batch-vocab-sized, map-only fold) + one word join + one doc agg;
-    results land append-only in versioned parquet (idempotent per
-    batch id — a retried batch overwrites its own dir, never
-    double-counts). 100 TB: this is the always-on ingest tokenizer —
-    throughput is scan-bound, state is zero (rules are broadcast-sized
-    and frozen), and a vocabulary drift large enough to matter ships
-    as NEW rules through the same offline loop."""
+    the union of the per-batch logs over any chunking of the feed is
+    bit-equal to the batch ``bpe_encode_census`` whose training
+    produced the rules (the equivalence test pins it). Per batch:
+    distinct-word segmentation (batch-vocab-sized, map-only fold) + one
+    word join + one doc agg. 100 TB: this is the always-on ingest
+    tokenizer — throughput is scan-bound, state is zero (rules are
+    broadcast-sized and frozen), and a vocabulary drift large enough to
+    matter ships as NEW rules through the same offline loop."""
     from ds_mapreduce_spark.operators.bpe import (
         encode_census_rows,
         segment_words_with_rules,
     )
     from ds_mapreduce_spark.plans.text_queries import _BPE_PATTERN
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev) -> dict:
         words = (
-            batch_df.select(
+            batch.select(
                 F.explode(
                     F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 1)
                 ).alias("w")
@@ -2236,29 +1572,14 @@ def run_streaming_bpe_encode(
             .distinct()
         )
         seg = segment_words_with_rules(words, rules)
-        encode_census_rows(batch_df, _BPE_PATTERN, seg).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/v{batch_id}")
+        return {"census": encode_census_rows(batch, _BPE_PATTERN, seg)}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return _union(
+        spark, state_dir, versions, "census",
+        "doc_id bigint, lang string, n_words bigint, "
+        "n_char_tokens bigint, n_bpe_tokens bigint, saved_bp bigint",
     )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir)
-    if not versions:  # empty feed, nothing landed in any run
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, lang string, n_words bigint, "
-            "n_char_tokens bigint, n_bpe_tokens bigint, saved_bp bigint",
-        )
-    # per-doc rows are independent across batches (docs never split
-    # across files): the result is the UNION of all landed versions,
-    # unlike the merge-state twins that read only the latest
-    return spark.read.parquet(*[f"{state_dir}/v{v}" for v in versions])
 
 
 def run_streaming_media_features(
@@ -2273,51 +1594,33 @@ def run_streaming_media_features(
     real codec chain the batch ``multimodal_jpeg_roundtrip`` query
     uses (``synth_jpeg_pixels -> encode_jpeg -> decode_jpeg_features``
     — full JFIF container, fixed-point IDCT), landing per-doc features
-    append-only in versioned parquet (idempotent per batch id). The
-    decode is a deterministic per-row map, so per-doc rows are
-    independent of batching and the union over ANY chunking of the
-    feed is bit-equal to the batch query — the stateless-twin pattern
-    run_streaming_bpe_encode established, with zero state by design.
-    100 TB: this is how a multimodal ingest actually runs — payloads
-    decoded once at arrival, features written columnar so downstream
-    reads prune the payload bytes away, throughput scan-bound and
-    embarrassingly parallel (no shuffle in the per-batch plan)."""
+    in a per-batch log. The decode is a deterministic per-row map, so
+    per-doc rows are independent of batching and the union over ANY
+    chunking of the feed is bit-equal to the batch query — the
+    stateless-twin pattern run_streaming_bpe_encode established, with
+    zero state by design. 100 TB: this is how a multimodal ingest
+    actually runs — payloads decoded once at arrival, features written
+    columnar so downstream reads prune the payload bytes away,
+    throughput scan-bound and embarrassingly parallel (no shuffle in
+    the per-batch plan)."""
     from ds_mapreduce_spark.operators.jpeg import (
         decode_jpeg_features,
         encode_jpeg,
         synth_jpeg_pixels,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
+    stream = _source(spark, docs_dir, per_file=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        feats = decode_jpeg_features(
-            encode_jpeg(synth_jpeg_pixels(batch_df.select("doc_id")))
-        )
-        feats.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
+    def step(batch: DataFrame, prev) -> dict:
+        pixels = synth_jpeg_pixels(batch.select("doc_id"))
+        return {"features": decode_jpeg_features(encode_jpeg(pixels))}
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    versions = _fold(stream, state_dir, checkpoint_dir, step)
+    return _union(
+        spark, state_dir, versions, "features",
+        "doc_id bigint, width bigint, height bigint, n_blocks bigint, "
+        "sum_v bigint, sum_sq bigint",
     )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, width bigint, height bigint, n_blocks bigint, "
-            "sum_v bigint, sum_sq bigint",
-        )
-    return spark.read.parquet(*[f"{state_dir}/v{v}" for v in versions])
 
 
 #: The streaming-twin census (VERDICT r7 #6): one row per streaming

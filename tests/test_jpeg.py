@@ -316,6 +316,14 @@ def test_corrupt_and_unsupported_fail_loudly():
     bad_scan = payload[:-3] + bytes([0xD3]) + payload[-2:]
     with pytest.raises(ValueError, match="Huffman|truncated|marker"):
         parse_jpeg(bad_scan)
+    # corrupt DHT: the DC symbol 0x14 is no size category (0..11), but
+    # its low nibble reads as a valid 4-bit size, so the scan would
+    # otherwise decode silently
+    dc_head = b"\x00" + bytes([1] + [0] * 15)
+    bad_dc = payload.replace(dc_head + b"\x04", dc_head + b"\x14")
+    assert bad_dc != payload
+    with pytest.raises(ValueError, match="DC size category"):
+        parse_jpeg(bad_dc)
 
 
 def test_restart_intervals_roundtrip_and_reset_dc():
