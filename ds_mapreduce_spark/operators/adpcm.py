@@ -23,10 +23,11 @@ earlier sample in the LOW nibble, blocks zero-padded to nBlockAlign.
 The decoder walks the chunk stream by hand, validates every field
 from the CONTAINER, and fails loudly on corruption.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 ADPCM packs 4 bits/sample — half of mu-law, a quarter of PCM16 — so
-it's the cheapest executor->Python transfer in the audio family. The
+it's the smallest payload in the audio family. The
 encoder RESETS the step index at every block header (spec-legal: the
 header stores both state variables, so any decoder reproduces the
 stream exactly), which makes blocks decode-independent — the audio
@@ -39,15 +40,13 @@ ADPCM_SAMPLES_PER_BLOCK instead of the payload length.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
     WAV_FEATURE_SCHEMA,
     WAV_SAMPLE_RATE,
-    pcm_feature_sums,
+    features_stage,
+    payload_stage,
+    pcm_rows,
 )
 
 _WAVE_FORMAT_IMA_ADPCM = 0x11
@@ -264,42 +263,13 @@ def decode_adpcm_wav_samples(payload: bytes) -> tuple[int, list[int]]:
     return rate, out
 
 
-def encode_adpcm(df: DataFrame) -> DataFrame:
-    """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
+#: (doc_id, samples) -> (doc_id, IMA ADPCM WAV payload)
+ENCODE_ADPCM = payload_stage(lambda _, s: encode_adpcm_wav_bytes(s), "samples")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_adpcm_wav_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def decode_adpcm_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> exact-integer amplitude features of the
-    RECONSTRUCTED signal — the same schema as the PCM/mu-law rows, so
-    this row's delta vs multimodal_wav_roundtrip measures exactly what
-    4-bit adaptive quantization cost."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, samples = decode_adpcm_wav_samples(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+#: (doc_id, payload) -> exact-integer amplitude features of the
+#: RECONSTRUCTED signal — the same schema as the PCM/mu-law rows, so
+#: this row's delta vs multimodal_wav_roundtrip measures exactly what
+#: 4-bit adaptive quantization cost
+DECODE_ADPCM = features_stage(
+    WAV_FEATURE_SCHEMA, lambda _, p: pcm_rows(*decode_adpcm_wav_samples(p))
+)

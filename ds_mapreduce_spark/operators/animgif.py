@@ -32,7 +32,8 @@ delta-extraction -> LZW -> container -> parse -> composition chain:
 a wrong rectangle, a mis-masked pixel, or a disposal bug shifts some
 frame's channel sums.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 Temporal delta coding is the storage-side win: payload bytes scale
 with MOTION, not frames (tests pin the 6-frame file far below 6x the
@@ -45,11 +46,8 @@ independent rows, so corpus-level parallelism is untouched.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
 from ds_mapreduce_spark.operators.gif import (
@@ -58,8 +56,16 @@ from ds_mapreduce_spark.operators.gif import (
     _grayscale_ramp_palette,
     _lzw_compress,
     _lzw_decompress,
+    palette_sums,
 )
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B, pxbytes
+from ds_mapreduce_spark.operators.multimodal import (
+    PCM_A,
+    PCM_B,
+    features_stage,
+    payload_stage,
+    pxbytes,
+    synth_stage,
+)
 
 ANIM_FRAMES = 6
 ANIM_BLOCK = 5
@@ -71,42 +77,30 @@ _BX_MOD = GIF_W - ANIM_BLOCK  # 19
 _BY_MOD = GIF_H - ANIM_BLOCK  # 11
 
 
-def synth_anim_frames(docs: DataFrame) -> DataFrame:
-    """(doc_id, frames): ANIM_FRAMES full rasters (row-major index
-    lists), each = static background + the moving block, numpy-rendered
-    (``multimodal.synth_map_arrays``) from the same closed form the
+def _anim_frames(d: np.ndarray) -> list:
+    """ANIM_FRAMES full rasters (row-major index lists), each = static
+    background + the moving block, from the same closed form the
     DuckDB oracle replays:
 
       bx(t) = (doc_id + 3t) mod 19,  by(t) = (doc_id div 7 + 2t) mod 11
       block pixel  = ((doc_id%256)*PCM_B + (1000t + 5(y-by) + (x-bx))*PCM_A) mod 255
       background   = ((doc_id%256)*PCM_A + i*PCM_B) mod 255
     """
-    import numpy as np
-
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = GIF_W * GIF_H
-    i = np.arange(n, dtype=np.int64)
+    i = np.arange(GIF_W * GIF_H, dtype=np.int64)
     x = (i % GIF_W)[None, None, :]
     y = (i // GIF_W)[None, None, :]
     t = np.arange(ANIM_FRAMES, dtype=np.int64)[None, :, None]
-
-    def build(d):
-        dc = d[:, None, None]
-        dm = dc % 256
-        bx = (dc + t * 3) % _BX_MOD
-        by = (dc // 7 + t * 2) % _BY_MOD
-        mask = (x >= bx) & (x < bx + ANIM_BLOCK) & (y >= by) & (y < by + ANIM_BLOCK)
-        blockv = (
-            dm * PCM_B + (t * 1000 + (y - by) * ANIM_BLOCK + (x - bx)) * PCM_A
-        ) % ANIM_VMOD
-        bg = (dm * PCM_A + i[None, None, :] * PCM_B) % ANIM_VMOD
-        arr = np.where(mask, blockv, bg).astype(np.int32)
-        return {"frames": [list(mat) for mat in arr]}
-
-    return synth_map_arrays(
-        docs, "doc_id bigint, frames array<array<int>>", build
-    )
+    dc = d[:, None, None]
+    dm = dc % 256
+    bx = (dc + t * 3) % _BX_MOD
+    by = (dc // 7 + t * 2) % _BY_MOD
+    mask = (x >= bx) & (x < bx + ANIM_BLOCK) & (y >= by) & (y < by + ANIM_BLOCK)
+    blockv = (
+        dm * PCM_B + (t * 1000 + (y - by) * ANIM_BLOCK + (x - bx)) * PCM_A
+    ) % ANIM_VMOD
+    bg = (dm * PCM_A + i[None, None, :] * PCM_B) % ANIM_VMOD
+    arr = np.where(mask, blockv, bg).astype(np.int32)
+    return [list(mat) for mat in arr]
 
 
 def _image_block(indices: bytes, left: int, top: int, w: int, h: int) -> bytes:
@@ -299,7 +293,7 @@ def parse_animgif(payload: bytes):
 
 
 # ---------------------------------------------------------------------------
-# Spark operators
+# Codec chain stages
 # ---------------------------------------------------------------------------
 
 ANIM_FEATURE_SCHEMA = (
@@ -307,60 +301,29 @@ ANIM_FEATURE_SCHEMA = (
     "sum_r bigint, sum_g bigint, sum_b bigint"
 )
 
-
-def encode_animgif(df: DataFrame) -> DataFrame:
-    """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_animgif_bytes(
-                    [pxbytes(f) for f in frames], GIF_W, GIF_H
-                )
-                for frames in batch["frames"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id) -> (doc_id, frames)
+SYNTH_ANIM = synth_stage("frames array<array<int>>", _anim_frames)
+#: (doc_id, frames) -> (doc_id, animated GIF89a payload)
+ENCODE_ANIMGIF = payload_stage(
+    lambda _, frames: encode_animgif_bytes(
+        [pxbytes(f) for f in frames], GIF_W, GIF_H
+    ),
+    "frames",
+)
 
 
-def decode_animgif_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> one row per COMPOSED frame with exact
-    palette-mapped channel sums — the temporal analog of the static
-    GIF features: a wrong delta rectangle or composition bug shifts
-    some frame's sums."""
+def _animgif_features(doc_id, payload: bytes) -> list[tuple]:
+    """One row per COMPOSED frame with exact palette-mapped channel
+    sums — the temporal analog of the static GIF features: a wrong
+    delta rectangle or composition bug shifts some frame's sums.
+    parse_animgif validated every opaque index against the table and
+    frame 0 covers the canvas, so composed indices stay in range."""
+    w, h, palette, composed = parse_animgif(payload)
+    return [
+        (t, w, h, *palette_sums(palette, canvas))
+        for t, canvas in enumerate(composed)
+    ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_id", "width", "height",
-                "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, palette, composed = parse_animgif(bytes(payload))
-                # palette-mapped channel sums via one index histogram
-                # per composed frame (r17) — value-identical to the
-                # three per-pixel generator passes (46% of this row's
-                # decode profile); parse_animgif validated every
-                # opaque index against the table and frame 0 covers
-                # the canvas, so composed indices stay in range
-                pal = np.frombuffer(palette, dtype=np.uint8)
-                pal = pal.astype(np.int64).reshape(-1, 3)
-                for t, canvas in enumerate(composed):
-                    cnt = np.bincount(
-                        np.frombuffer(canvas, dtype=np.uint8),
-                        minlength=pal.shape[0],
-                    )
-                    sum_r, sum_g, sum_b = (cnt @ pal).tolist()
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_id"].append(t)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_r"].append(sum_r)
-                    rows["sum_g"].append(sum_g)
-                    rows["sum_b"].append(sum_b)
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=ANIM_FEATURE_SCHEMA)
+#: (doc_id, payload) -> ANIM_FEATURE_SCHEMA, one row per frame
+DECODE_ANIMGIF = features_stage(ANIM_FEATURE_SCHEMA, _animgif_features)

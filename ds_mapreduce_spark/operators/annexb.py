@@ -46,10 +46,11 @@ RBSPs -> `mcv.parse_mcv`/`decode` (every frame CRC still checked) ->
 per-frame reconstruction features. Parity therefore proves the whole
 wrap -> escape -> scan -> unescape -> parse -> decode chain.
 
-Scale notes (100 TB): identical plan shape to the MCV row — chained
-Arrow-batched ``mapInPandas``, map-only, zero data-bearing shuffles
-beyond the narrow-key spread. Annex-B's start-code scan is what makes
-H.264 elementary streams SPLITTABLE: a reader dropped at a random
+Scale notes (100 TB): identical plan shape to the MCV row — one
+Arrow-batched ``mapInPandas`` running synth, encode, wrap and decode
+as stages (``multimodal.map_stages``), map-only, zero data-bearing
+shuffles beyond the narrow-key spread. Annex-B's start-code scan is
+what makes H.264 elementary streams SPLITTABLE: a reader dropped at a random
 offset resynchronizes at the next start code — the same property the
 frame-level CRC gives MLT1/MCV1, here at the byte-stream level.
 
@@ -61,11 +62,8 @@ container-format seam (`operators/multimodal.py` r9 note).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
     BitReader,
@@ -85,6 +83,10 @@ from ds_mapreduce_spark.operators.mcv import (
     mcv_payload_features,
 )
 from ds_mapreduce_spark.operators.mdct import _read_ue, _write_ue
+from ds_mapreduce_spark.operators.multimodal import (
+    features_stage,
+    payload_stage,
+)
 
 #: fixed UUID for the SEI user_data_unregistered record — all bytes
 #: > 0x03 so the UUID itself never creates or terminates an emulation
@@ -418,7 +420,7 @@ def parse_annexb(stream: bytes):
 @corruption_to_value_error
 def _parse_annexb_with_nals(stream: bytes):
     """`parse_annexb` body that also returns the scanned NAL list, so
-    `decode_annexb_features` computes its container census from the
+    `_annexb_features` computes its container census from the
     SAME scan instead of re-splitting (and re-unescaping) the whole
     stream a second time per document (r16)."""
     if len(stream) < 5:
@@ -463,71 +465,36 @@ def rebuild_mcv(width: int, height: int, frame_rbsps: list[bytes]) -> bytes:
     return header + b"".join(frame_rbsps)
 
 
-def decode_annexb_features(media: DataFrame) -> DataFrame:
-    """(doc_id, stream) -> per-doc container census + reconstruction
-    features through the full Annex-B chain. ``emu_bytes`` counts the
+def _annexb_features(doc_id, stream: bytes) -> list[tuple]:
+    """Per-doc container census + reconstruction features through the
+    full Annex-B chain. ``emu_bytes`` counts the
     emulation_prevention_three_bytes the scan stripped (graded
     closed-form by the oracle's replay of the escape rule);
     ``sei_doc_id`` must round-trip the identity through the escaped
     record. Frame features come from decoding the REASSEMBLED MCV1
     container, so every slice still passes its CRC."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "n_nals", "n_idr", "sps_width", "sps_height",
-                    "sei_doc_id", "sum_rbsp_bytes", "emu_bytes",
-                    "container_bytes", "sum_v_total", "sum_sq_v_total",
-                    "sum_abs_mv_total",
-                )
-            }
-            for doc_id, stream in zip(batch["doc_id"], batch["payload"]):
-                stream = bytes(stream)
-                nals, (sei_doc_id, width, height, frame_rbsps) = (
-                    _parse_annexb_with_nals(stream)
-                )
-                feats = mcv_payload_features(
-                    rebuild_mcv(width, height, frame_rbsps)
-                )
-                rbsp_total = sum(len(r) for _, _, r, _ in nals)
-                start_bytes = sum(sc for _, _, _, sc in nals)
-                rows["doc_id"].append(doc_id)
-                rows["n_nals"].append(len(nals))
-                rows["n_idr"].append(
-                    sum(1 for _, t, _, _ in nals if t == 5)
-                )
-                rows["sps_width"].append(width)
-                rows["sps_height"].append(height)
-                rows["sei_doc_id"].append(sei_doc_id)
-                rows["sum_rbsp_bytes"].append(rbsp_total)
-                rows["emu_bytes"].append(
-                    len(stream) - start_bytes - len(nals) - rbsp_total
-                )
-                rows["container_bytes"].append(len(stream))
-                rows["sum_v_total"].append(sum(f["sum_v"] for f in feats))
-                rows["sum_sq_v_total"].append(
-                    sum(f["sum_sq_v"] for f in feats)
-                )
-                rows["sum_abs_mv_total"].append(
-                    sum(f["sum_abs_mv"] for f in feats)
-                )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=ANNEXB_FEATURE_SCHEMA)
+    nals, (sei_doc_id, width, height, frame_rbsps) = _parse_annexb_with_nals(
+        stream
+    )
+    feats = mcv_payload_features(rebuild_mcv(width, height, frame_rbsps))
+    rbsp_total = sum(len(r) for _, _, r, _ in nals)
+    start_bytes = sum(sc for _, _, _, sc in nals)
+    return [(
+        len(nals),
+        sum(1 for _, t, _, _ in nals if t == 5),
+        width,
+        height,
+        sei_doc_id,
+        rbsp_total,
+        len(stream) - start_bytes - len(nals) - rbsp_total,
+        len(stream),
+        sum(f["sum_v"] for f in feats),
+        sum(f["sum_sq_v"] for f in feats),
+        sum(f["sum_abs_mv"] for f in feats),
+    )]
 
 
-def wrap_annexb_df(media: DataFrame) -> DataFrame:
-    """(doc_id, payload=MCV1) -> (doc_id, payload=Annex-B stream)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                wrap_annexb(int(d), bytes(p))
-                for d, p in zip(batch["doc_id"], batch["payload"])
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id, payload=MCV1) -> (doc_id, payload=Annex-B stream)
+WRAP_ANNEXB = payload_stage(lambda d, p: wrap_annexb(int(d), bytes(p)))
+#: (doc_id, Annex-B stream) -> ANNEXB_FEATURE_SCHEMA
+DECODE_ANNEXB = features_stage(ANNEXB_FEATURE_SCHEMA, _annexb_features)

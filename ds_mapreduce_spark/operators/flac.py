@@ -39,7 +39,8 @@ precedent, entropy-coding edition). tests/test_flac.py additionally
 locks the CRC polynomials against published check values, Rice and
 UTF-8 coding by brute-force roundtrip, and the tamper paths.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
 map-only, zero data-bearing shuffles beyond the narrow-key spread
 (`plans/multimodal_queries.py:_doc_ids_spread`). Frames are
 decode-independent once STREAMINFO is read (fixed-blocksize streams
@@ -57,16 +58,15 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
     WAV_FEATURE_SCHEMA,
     WAV_SAMPLE_RATE,
-    pcm_feature_sums,
+    features_stage,
+    payload_stage,
+    pcm_rows,
 )
 
 #: fixed encoder blocksize — 256 has a direct 4-bit code (0b1000) in
@@ -858,43 +858,14 @@ def decode_flac_samples(payload: bytes) -> tuple[int, list[int]]:
     return rate, out
 
 
-# ---------------------------------------------------- Spark operators
-def encode_flac(df: DataFrame) -> DataFrame:
-    """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
+# ---------------------------------------------------- codec chain stages
+#: (doc_id, samples) -> (doc_id, FLAC payload)
+ENCODE_FLAC = payload_stage(lambda _, s: encode_flac_bytes(s), "samples")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_flac_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
-def decode_flac_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> exact-integer amplitude features of the
-    decoded signal — the shared audio-family schema, so this row's
-    delta vs multimodal_wav_roundtrip prices Rice coding + prediction
-    against the raw-PCM container."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, samples = decode_flac_samples(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+#: (doc_id, payload) -> exact-integer amplitude features of the decoded
+#: signal — the shared audio-family schema, so this row's delta vs
+#: multimodal_wav_roundtrip prices Rice coding + prediction against the
+#: raw-PCM container
+DECODE_FLAC = features_stage(
+    WAV_FEATURE_SCHEMA, lambda _, p: pcm_rows(*decode_flac_samples(p))
+)

@@ -19,23 +19,27 @@ our files to IDENTICAL PCM (tests/test_codec_interchange.py), and
 tests/test_g711.py locks encode->decode == the oracle's closed form
 over the ENTIRE 16-bit input range.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
-map-only, zero shuffles beyond the narrow-key spread — the WAV/PPM/PNG/JPEG/GIF plan shape; mu-law
-halves payload bytes vs PCM16, shrinking executor->Python transfer.
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
+map-only, zero shuffles beyond the narrow-key spread — the
+WAV/PPM/PNG/JPEG/GIF plan shape; mu-law halves payload bytes vs
+PCM16.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
     WAV_FEATURE_SCHEMA,
     WAV_SAMPLE_RATE,
+    features_stage,
+    map_stages,
+    payload_stage,
+    pcm_rows,
 )
 
 ULAW_BIAS = 0x84  # 132
@@ -127,45 +131,25 @@ def parse_ulaw_wav(payload: bytes):
     return rate, data
 
 
-def encode_ulaw(df: DataFrame) -> DataFrame:
-    """REAL G.711 encoder: (doc_id, samples PCM16 ints) ->
-    (doc_id, payload), a standard mu-law WAV. Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_ulaw_wav_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: REAL G.711 encoder: (doc_id, samples PCM16 ints) -> (doc_id, payload),
+#: a standard mu-law WAV
+ENCODE_ULAW = payload_stage(lambda _, s: encode_ulaw_wav_bytes(s), "samples")
 
 
-def decode_ulaw_features(media: DataFrame) -> DataFrame:
+def _ulaw_features(doc_id, payload: bytes) -> list[tuple]:
     """REAL G.711 decoder: hand RIFF parse + mu-law expansion, then
     exact integer amplitude features over the RECONSTRUCTED samples
     (same schema as the PCM WAV decoder, so the two rows' delta shows
     exactly what companding cost). Parity against the closed-form
     oracle proves the whole lossy chain bit-reproducible."""
+    rate, data = parse_ulaw_wav(payload)
+    return pcm_rows(rate, _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, data = parse_ulaw_wav(bytes(payload))
-                pcm = _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)]
-                a = np.abs(pcm)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(pcm))
-                rows["peak_abs"].append(int(a.max()) if len(a) else 0)
-                rows["sum_abs"].append(int(a.sum()))
-                rows["sum_sq"].append(int((pcm * pcm).sum()))
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+#: (doc_id, payload) -> WAV_FEATURE_SCHEMA
+DECODE_ULAW = features_stage(WAV_FEATURE_SCHEMA, _ulaw_features)
+
+
+def decode_ulaw_features(media: DataFrame) -> DataFrame:
+    """``DECODE_ULAW`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_ULAW)

@@ -27,26 +27,30 @@ never sees a GIF byte — parity proves the LZW roundtrip preserved
 every index. Palette entry i maps to RGB (i, (i+85)%256, (i+170)%256),
 kept integer-exact on both engines.
 
-Scale notes (100 TB): both legs are Arrow-batched ``mapInPandas``,
-map-only, zero shuffles beyond the narrow-key spread — identical plan shape to the WAV/PPM/PNG/JPEG
-roundtrips; payload width sizes tasks via maxPartitionBytes.
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
+map-only, zero shuffles beyond the narrow-key spread — identical plan
+shape to the WAV/PPM/PNG/JPEG roundtrips; payload width sizes tasks
+via maxPartitionBytes.
 """
 
 from __future__ import annotations
 
 import functools
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
     PCM_A,
     PCM_B,
     PPM_FEATURE_SCHEMA,
+    features_stage,
+    map_stages,
+    payload_stage,
     pxbytes,
+    synth_stage,
 )
 
 GIF_W = 24
@@ -337,79 +341,62 @@ def parse_gif(payload: bytes):
 
 
 # ---------------------------------------------------------------------------
-# Spark operators
+# Codec chain stages
 # ---------------------------------------------------------------------------
 
 
-def synth_gif_indices(docs: DataFrame) -> DataFrame:
-    """(doc_id, px): deterministic palette indices,
+def _gif_indices(d: np.ndarray) -> list:
+    """Deterministic palette indices,
     px[i] = ((doc_id mod 256)*PCM_A + i*PCM_B) mod 256 — the shared
-    synth family (doc_id pre-reduced mod 256, BIGINT-budget rule).
-    numpy-rendered (``multimodal.synth_map_arrays``)."""
-    import numpy as np
-
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = GIF_W * GIF_H
-    i = np.arange(n, dtype=np.int64)
-
-    def build(d):
-        arr = ((d[:, None] % 256) * PCM_A + i[None, :] * PCM_B) % 256
-        return {"px": list(arr.astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, px array<int>", build)
+    synth family (doc_id pre-reduced mod 256, BIGINT-budget rule)."""
+    i = np.arange(GIF_W * GIF_H, dtype=np.int64)
+    arr = ((d[:, None] % 256) * PCM_A + i[None, :] * PCM_B) % 256
+    return list(arr.astype(np.int32))
 
 
-def encode_gif(df: DataFrame) -> DataFrame:
-    """REAL GIF encoder: (doc_id, px palette indices) ->
-    (doc_id, payload), a standard GIF89a any viewer opens.
-    Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_gif_bytes(pxbytes(px), GIF_W, GIF_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id) -> (doc_id, px palette indices)
+SYNTH_GIF = synth_stage("px array<int>", _gif_indices)
 
 
-def decode_gif_features(media: DataFrame) -> DataFrame:
+def synth_gif_indices(docs: DataFrame) -> DataFrame:
+    """(doc_id, px) for each doc: ``SYNTH_GIF`` alone."""
+    return map_stages(docs.select("doc_id"), SYNTH_GIF)
+
+
+#: REAL GIF encoder: (doc_id, px palette indices) -> (doc_id, payload),
+#: a standard GIF89a any viewer opens
+ENCODE_GIF = payload_stage(
+    lambda _, px: encode_gif_bytes(pxbytes(px), GIF_W, GIF_H), "px"
+)
+
+
+def palette_sums(palette: bytes, indices: bytes) -> tuple[int, int, int]:
+    """Per-channel sums of the PALETTE-MAPPED pixels via one index
+    histogram (r17): counts @ palette-column is value-identical to the
+    three per-pixel generator passes it replaces. The parsers validate
+    every index < palette entries, so the bincount length equals the
+    table length."""
+    pal = np.frombuffer(palette, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
+    cnt = np.bincount(
+        np.frombuffer(indices, dtype=np.uint8), minlength=pal.shape[0]
+    )
+    return tuple((cnt @ pal).tolist())
+
+
+def _gif_features(doc_id, payload: bytes) -> list[tuple]:
     """REAL GIF decoder: full container parse + hand-implemented LZW
     decompression, then per-channel exact sums over the PALETTE-MAPPED
     pixels (same feature schema as the PPM/PNG decoders). Parity
     against the analytic oracle proves dictionary coding round-tripped
     every index."""
+    w, h, palette, indices = parse_gif(payload)
+    return [(w, h, *palette_sums(palette, indices))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, palette, indices = parse_gif(bytes(payload))
-                # palette-mapped channel sums via one index histogram
-                # (r17): counts @ palette-column is value-identical to
-                # the three per-pixel generator passes it replaces
-                # (indices are validated < palette entries by
-                # parse_gif, so bincount length == table length)
-                pal = np.frombuffer(palette, dtype=np.uint8)
-                pal = pal.astype(np.int64).reshape(-1, 3)
-                cnt = np.bincount(
-                    np.frombuffer(indices, dtype=np.uint8),
-                    minlength=pal.shape[0],
-                )
-                sum_r, sum_g, sum_b = (cnt @ pal).tolist()
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum_r)
-                rows["sum_g"].append(sum_g)
-                rows["sum_b"].append(sum_b)
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+#: (doc_id, payload) -> PPM_FEATURE_SCHEMA
+DECODE_GIF = features_stage(PPM_FEATURE_SCHEMA, _gif_features)
+
+
+def decode_gif_features(media: DataFrame) -> DataFrame:
+    """``DECODE_GIF`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_GIF)

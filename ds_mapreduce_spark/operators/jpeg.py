@@ -36,12 +36,14 @@ equivalence of the analytic formula vs the general pipeline over the
 ENTIRE synth parameter space (192 base values x 32 step values) is
 locked by tests/test_jpeg.py.
 
-Scale notes (100 TB): both legs are Arrow-batched ``mapInPandas``,
-map-only, zero shuffles beyond the narrow-key spread; the DCT/IDCT are vectorized numpy int64
-matmuls over all blocks of a payload at once, only the entropy coder
-is per-symbol Python. Payload width (not row count) sizes tasks via
-``spark.sql.files.maxPartitionBytes``; features are written columnar
-so the payload column prunes away downstream.
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
+map-only, zero shuffles beyond the narrow-key spread; the DCT/IDCT
+are vectorized numpy int64 matmuls over all blocks of a payload at
+once, only the entropy coder is per-symbol Python. Payload width (not
+row count) sizes tasks via ``spark.sql.files.maxPartitionBytes``;
+features are written columnar so the payload column prunes away
+downstream.
 
 Reference parity note: the reference engine (C++/Rust control plane,
 /root/reference/src) has no media path at all — this family implements
@@ -54,14 +56,20 @@ from __future__ import annotations
 import functools
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PCM_A,
+    PCM_B,
+    features_stage,
+    map_stages,
+    payload_stage,
+    pxbytes,
+    synth_stage,
+)
 
 #: synthesized image geometry — multiples of 8 (one JPEG block = 8x8)
 JPEG_W = 32
@@ -822,55 +830,40 @@ def parse_jpeg(payload: bytes):
 
 
 # ---------------------------------------------------------------------------
-# Spark operators
+# Codec chain stages
 # ---------------------------------------------------------------------------
 
 
-def synth_jpeg_pixels(docs: DataFrame) -> DataFrame:
-    """(doc_id, px): deterministic grayscale samples forming
-    constant+step 8x8 blocks — block b's base value
+def _jpeg_px(d: np.ndarray) -> list:
+    """Deterministic grayscale samples forming constant+step 8x8
+    blocks — block b's base value
     v0 = 32 + ((doc_id%256)*PCM_A + b*PCM_B) % 192 and step
     d = ((doc_id%256)*PCM_B + b*PCM_A) % 32 - 16; pixel (x,y) in the
     block is v0 + (x%8 < 4 ? d : -d), always inside [16, 239].
     Exactly reproducible in ANSI SQL (the oracle replays it); doc_id
-    pre-reduced mod 256 before the multiply (BIGINT-budget rule);
-    numpy-rendered (``multimodal.synth_map_arrays``)."""
-    import numpy as np
-
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = JPEG_W * JPEG_H
-    bw = JPEG_W // 8
-    i = np.arange(n, dtype=np.int64)
-    b = (i // (JPEG_W * 8)) * bw + (i % JPEG_W) // 8
+    pre-reduced mod 256 before the multiply (BIGINT-budget rule)."""
+    i = np.arange(JPEG_W * JPEG_H, dtype=np.int64)
+    b = (i // (JPEG_W * 8)) * (JPEG_W // 8) + (i % JPEG_W) // 8
     sign = np.where(i % 8 < 4, 1, -1).astype(np.int64)
-
-    def build(d):
-        dm = d[:, None] % 256
-        base = 32 + (dm * PCM_A + b[None, :] * PCM_B) % 192
-        delta = (dm * PCM_B + b[None, :] * PCM_A) % 32 - 16
-        return {"px": list((base + sign[None, :] * delta).astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, px array<int>", build)
+    dm = d[:, None] % 256
+    base = 32 + (dm * PCM_A + b[None, :] * PCM_B) % 192
+    delta = (dm * PCM_B + b[None, :] * PCM_A) % 32 - 16
+    return list((base + sign[None, :] * delta).astype(np.int32))
 
 
-def encode_jpeg(df: DataFrame) -> DataFrame:
-    """REAL JPEG encoder: (doc_id, px flat grayscale ints) ->
-    (doc_id, payload) where payload is a standard baseline JFIF file.
-    Arrow-batched, map-only; DCT + quantization vectorized over all
-    blocks of an image, only the entropy coder is per-symbol Python."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_jpeg_bytes(bytes(list(px)), JPEG_W, JPEG_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+def _color_jpeg_px(d: np.ndarray) -> list:
+    """Interleaved RGB samples forming constant+step blocks PER
+    CHANNEL — channel k of block b draws its (base, step) from
+    extended block id 3b+k, so the three planes differ and the
+    closed-form oracle covers each (block, channel) instance."""
+    j = np.arange(JPEG_W * JPEG_H * 3, dtype=np.int64)
+    p = j // 3
+    bid = 3 * ((p // (JPEG_W * 8)) * (JPEG_W // 8) + (p % JPEG_W) // 8) + j % 3
+    sign = np.where(p % 8 < 4, 1, -1).astype(np.int64)
+    dm = d[:, None] % 256
+    base = 32 + (dm * PCM_A + bid[None, :] * PCM_B) % 192
+    delta = (dm * PCM_B + bid[None, :] * PCM_A) % 32 - 16
+    return list((base + sign[None, :] * delta).astype(np.int32))
 
 
 JPEG_FEATURE_SCHEMA = (
@@ -878,106 +871,64 @@ JPEG_FEATURE_SCHEMA = (
     "sum_v bigint, sum_sq bigint"
 )
 
-
-def synth_color_jpeg_pixels(docs: DataFrame) -> DataFrame:
-    """(doc_id, px): interleaved RGB samples forming constant+step
-    blocks PER CHANNEL — channel k of block b draws its (base, step)
-    from extended block id 3b+k, so the three planes differ and the
-    closed-form oracle covers each (block, channel) instance."""
-    import numpy as np
-
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = JPEG_W * JPEG_H * 3
-    bw = JPEG_W // 8
-    j = np.arange(n, dtype=np.int64)
-    p = j // 3
-    bid = 3 * ((p // (JPEG_W * 8)) * bw + (p % JPEG_W) // 8) + j % 3
-    sign = np.where(p % 8 < 4, 1, -1).astype(np.int64)
-
-    def build(d):
-        dm = d[:, None] % 256
-        base = 32 + (dm * PCM_A + bid[None, :] * PCM_B) % 192
-        delta = (dm * PCM_B + bid[None, :] * PCM_A) % 32 - 16
-        return {"px": list((base + sign[None, :] * delta).astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, px array<int>", build)
-
-
-def encode_jpeg_color(df: DataFrame) -> DataFrame:
-    """REAL color JPEG encoder: (doc_id, px interleaved RGB ints) ->
-    (doc_id, payload), a standard 4:4:4 YCbCr baseline JFIF file.
-    Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_jpeg_color_bytes(bytes(list(px)), JPEG_W, JPEG_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
-
-
 JPEG_COLOR_FEATURE_SCHEMA = (
     "doc_id bigint, width bigint, height bigint, n_blocks bigint, "
     "sum_r bigint, sum_g bigint, sum_b bigint"
 )
 
 
-def decode_jpeg_color_features(media: DataFrame) -> DataFrame:
-    """REAL color JPEG decoder: full 3-component parse (interleaved
-    MCUs, per-component predictors and tables, fixed-point IDCT,
-    fixed-point YCbCr->RGB) then exact per-channel sums over the
-    RECONSTRUCTED pixels."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks",
-                "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse_jpeg(bytes(payload))
-                if len(px) != w * h * 3:
-                    raise ValueError(f"doc {doc_id}: expected RGB output")
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append((w // 8) * (h // 8))
-                rows["sum_r"].append(int(a[0::3].sum()))
-                rows["sum_g"].append(int(a[1::3].sum()))
-                rows["sum_b"].append(int(a[2::3].sum()))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=JPEG_COLOR_FEATURE_SCHEMA)
-
-
-def decode_jpeg_features(media: DataFrame) -> DataFrame:
+def _jpeg_features(doc_id, payload: bytes) -> list[tuple]:
     """REAL JPEG decoder: full container parse (``parse_jpeg`` — every
     table read from the file, Huffman rebuilt from DHT, fixed-point
     IDCT) then exact integer features over the RECONSTRUCTED pixels.
     Parity against the analytic oracle proves the whole lossy chain is
     bit-reproducible, not just that bytes survived."""
+    w, h, px = parse_jpeg(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    return [(w, h, (w // 8) * (h // 8), int(a.sum()), int((a * a).sum()))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks", "sum_v", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse_jpeg(bytes(payload))
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append((w // 8) * (h // 8))
-                rows["sum_v"].append(int(a.sum()))
-                rows["sum_sq"].append(int((a * a).sum()))
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=JPEG_FEATURE_SCHEMA)
+def _jpeg_color_features(doc_id, payload: bytes) -> list[tuple]:
+    """REAL color JPEG decoder: full 3-component parse (interleaved
+    MCUs, per-component predictors and tables, fixed-point IDCT,
+    fixed-point YCbCr->RGB) then exact per-channel sums over the
+    RECONSTRUCTED pixels."""
+    w, h, px = parse_jpeg(payload)
+    if len(px) != w * h * 3:
+        raise ValueError(f"doc {doc_id}: expected RGB output")
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    return [(
+        w, h, (w // 8) * (h // 8),
+        int(a[0::3].sum()), int(a[1::3].sum()), int(a[2::3].sum()),
+    )]
+
+
+#: (doc_id) -> (doc_id, px): the grayscale row's synth
+SYNTH_JPEG = synth_stage("px array<int>", _jpeg_px)
+#: REAL JPEG encoder: (doc_id, px) -> (doc_id, baseline JFIF payload);
+#: DCT + quantization vectorized over all blocks of an image, only the
+#: entropy coder is per-symbol Python
+ENCODE_JPEG = payload_stage(
+    lambda _, px: encode_jpeg_bytes(pxbytes(px), JPEG_W, JPEG_H), "px"
+)
+#: (doc_id, payload) -> JPEG_FEATURE_SCHEMA
+DECODE_JPEG = features_stage(JPEG_FEATURE_SCHEMA, _jpeg_features)
+#: the grayscale roundtrip, shared by the batch query and its
+#: streaming twin
+JPEG_CHAIN = (SYNTH_JPEG, ENCODE_JPEG, DECODE_JPEG)
+
+#: (doc_id) -> (doc_id, px interleaved RGB)
+SYNTH_JPEG_COLOR = synth_stage("px array<int>", _color_jpeg_px)
+#: REAL color JPEG encoder: a standard 4:4:4 YCbCr baseline JFIF file
+ENCODE_JPEG_COLOR = payload_stage(
+    lambda _, px: encode_jpeg_color_bytes(pxbytes(px), JPEG_W, JPEG_H), "px"
+)
+#: (doc_id, payload) -> JPEG_COLOR_FEATURE_SCHEMA
+DECODE_JPEG_COLOR = features_stage(
+    JPEG_COLOR_FEATURE_SCHEMA, _jpeg_color_features
+)
+
+
+def decode_jpeg_features(media: DataFrame) -> DataFrame:
+    """``DECODE_JPEG`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_JPEG)

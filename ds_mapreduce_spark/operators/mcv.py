@@ -50,7 +50,8 @@ polynomial) over the frame's coded bytes. The decoder validates every
 field, rejects out-of-picture motion vectors, verifies each frame CRC,
 and fails on trailing bytes.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 Prediction chains frames WITHIN a payload — the defining cost of
 inter coding (same seam as `operators/animgif.py`) — while payloads
@@ -67,10 +68,8 @@ the codec seam the r8 VERDICT named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
@@ -87,7 +86,14 @@ from ds_mapreduce_spark.operators.jpeg import (
     _da_int,
 )
 from ds_mapreduce_spark.operators.mdct import _write_ue
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PCM_A,
+    PCM_B,
+    features_stage,
+    map_stages,
+    payload_stage,
+    synth_stage,
+)
 
 MCV_MAGIC = b"MCV1"
 MCV_W = 24
@@ -109,34 +115,32 @@ MCV_FEATURE_SCHEMA = (
 )
 
 
-def synth_scroll_frames(docs: DataFrame) -> DataFrame:
-    """(doc_id, frames): MCV_FRAMES full rasters (row-major index
-    lists), frame t = the base linear-congruential pattern scrolled by
-    (3t, 2t) with toroidal wrap — numpy-rendered
-    (``multimodal.synth_map_arrays``) from the same closed form the
-    DuckDB oracle replays:
+def _scroll_frames(d: np.ndarray) -> list:
+    """MCV_FRAMES full rasters (row-major index lists), frame t = the
+    base linear-congruential pattern scrolled by (3t, 2t) with toroidal
+    wrap — the same closed form the DuckDB oracle replays:
 
       base(i)      = ((doc_id%256)*PCM_A + i*PCM_B) mod 256
       cur(x, y, t) = base(((y+2t)%16)*24 + ((x+3t)%24))
     """
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = MCV_W * MCV_H
-    i = np.arange(n, dtype=np.int64)
+    i = np.arange(MCV_W * MCV_H, dtype=np.int64)
     t = np.arange(MCV_FRAMES, dtype=np.int64)
     # (frames, n): source index of each pixel after the (3t, 2t) scroll
     src = (
         (((i // MCV_W)[None, :] + MCV_VY * t[:, None]) % MCV_H) * MCV_W
         + ((i % MCV_W)[None, :] + MCV_VX * t[:, None]) % MCV_W
     )
+    arr = ((d[:, None, None] % 256) * PCM_A + src[None, :, :] * PCM_B) % 256
+    return [list(mat) for mat in arr.astype(np.int32)]
 
-    def build(d):
-        arr = ((d[:, None, None] % 256) * PCM_A + src[None, :, :] * PCM_B) % 256
-        return {"frames": [list(mat) for mat in arr.astype(np.int32)]}
 
-    return synth_map_arrays(
-        docs, "doc_id bigint, frames array<array<int>>", build
-    )
+#: (doc_id) -> (doc_id, frames): the video rows' shared synth
+SYNTH_SCROLL = synth_stage("frames array<array<int>>", _scroll_frames)
+
+
+def synth_scroll_frames(docs: DataFrame) -> DataFrame:
+    """(doc_id, frames) for each doc: ``SYNTH_SCROLL`` alone."""
+    return map_stages(docs.select("doc_id"), SYNTH_SCROLL)
 
 
 def _quant_flat(coeffs: np.ndarray, step: int) -> np.ndarray:
@@ -375,50 +379,30 @@ def _decode_frames_from_parsed(frames) -> list[np.ndarray]:
     return out
 
 
-def encode_mcv(df: DataFrame) -> DataFrame:
-    """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [encode_mcv_bytes(frames) for frames in batch["frames"]]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id, frames) -> (doc_id, MCV1 payload)
+ENCODE_MCV = payload_stage(lambda _, f: encode_mcv_bytes(f), "frames")
 
 
-def decode_mcv_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> one row per RECONSTRUCTED frame: pixel
-    sums (grading the whole prediction+transform chain), the motion
-    budget |dx|+|dy| summed over blocks (grading the search), and the
-    frame's coded bytes (grading the syntax coder and the skip-flag
-    economics — P-frame bytes track the wrap seam, not frame count)."""
+def _mcv_features(doc_id, payload: bytes) -> list[tuple]:
+    """One row per RECONSTRUCTED frame: pixel sums (grading the whole
+    prediction+transform chain), the motion budget |dx|+|dy| summed
+    over blocks (grading the search), and the frame's coded bytes
+    (grading the syntax coder and the skip-flag economics — P-frame
+    bytes track the wrap seam, not frame count)."""
+    return [
+        (f["frame_id"], MCV_W, MCV_H, f["sum_v"], f["sum_sq_v"],
+         f["sum_abs_mv"], f["frame_bytes"])
+        for f in mcv_payload_features(payload)
+    ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_id", "width", "height",
-                "sum_v", "sum_sq_v", "sum_abs_mv", "frame_bytes",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                for f in mcv_payload_features(bytes(payload)):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_id"].append(f["frame_id"])
-                    rows["width"].append(MCV_W)
-                    rows["height"].append(MCV_H)
-                    rows["sum_v"].append(f["sum_v"])
-                    rows["sum_sq_v"].append(f["sum_sq_v"])
-                    rows["sum_abs_mv"].append(f["sum_abs_mv"])
-                    rows["frame_bytes"].append(f["frame_bytes"])
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=MCV_FEATURE_SCHEMA)
+#: (doc_id, payload) -> MCV_FEATURE_SCHEMA, one row per frame
+DECODE_MCV = features_stage(MCV_FEATURE_SCHEMA, _mcv_features)
 
 
 def mcv_payload_features(payload: bytes) -> list[dict]:
     """Per-frame features of one MCV1 payload — the per-payload core of
-    `decode_mcv_features`, shared with the Annex-B wrapper
+    `DECODE_MCV`, shared with the Annex-B wrapper
     (`operators/annexb.py`) which decodes a REASSEMBLED container."""
     frames, spans = parse_mcv(payload)
     recons = _decode_frames_from_parsed(frames)

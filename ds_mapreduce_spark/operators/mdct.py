@@ -40,7 +40,8 @@ decode-independent (scalefactors are stored, prediction never crosses
 a granule) — the audio analog of JPEG restart intervals: a 100 TB
 corpus can split one payload's granules across tasks.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
 map-only, zero data-bearing shuffles beyond the narrow-key spread
 (`plans/multimodal_queries.py:_doc_ids_spread`). The transforms are
 numpy int64 matrix products (bounded by |sum| < 2^39, no overflow);
@@ -59,11 +60,8 @@ JPEG/MP3/H.264 seam the r8 VERDICT named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
     BitReader,
@@ -75,6 +73,8 @@ from ds_mapreduce_spark.operators.flac import (
 )
 from ds_mapreduce_spark.operators.multimodal import (
     WAV_SAMPLE_RATE,
+    features_stage,
+    payload_stage,
     pcm_feature_sums,
 )
 
@@ -436,45 +436,19 @@ def decode_mdct_samples(payload: bytes) -> tuple[int, list[int]]:
     return rate, granules_to_samples(n_samples, granules)
 
 
-def encode_mdct(df: DataFrame) -> DataFrame:
-    """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_mdct_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id, samples) -> (doc_id, MLT1 payload)
+ENCODE_MDCT = payload_stage(lambda _, s: encode_mdct_bytes(s), "samples")
 
 
-def decode_mdct_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> exact-integer amplitude features of the
-    RECONSTRUCTED signal plus the coded size. Shares the audio-family
-    columns with the WAV/mu-law/ADPCM/FLAC rows, so this row's delta
-    vs multimodal_wav_roundtrip prices perceptual transform coding;
+def _mdct_features(doc_id, payload: bytes) -> list[tuple]:
+    """Exact-integer amplitude features of the RECONSTRUCTED signal
+    plus the coded size. Shares the audio-family columns with the
+    WAV/mu-law/ADPCM/FLAC rows, so this row's delta vs
+    multimodal_wav_roundtrip prices perceptual transform coding;
     payload_bytes grades the entropy coder byte-for-byte."""
+    rate, samples = decode_mdct_samples(payload)
+    return [(rate, len(samples), *pcm_feature_sums(samples), len(payload))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples", "peak_abs",
-                "sum_abs", "sum_sq", "payload_bytes",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                payload = bytes(payload)
-                rate, samples = decode_mdct_samples(payload)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-                rows["payload_bytes"].append(len(payload))
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=MDCT_FEATURE_SCHEMA)
+#: (doc_id, payload) -> MDCT_FEATURE_SCHEMA
+DECODE_MDCT = features_stage(MDCT_FEATURE_SCHEMA, _mdct_features)

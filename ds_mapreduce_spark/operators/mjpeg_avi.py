@@ -12,20 +12,19 @@ the same fixed-point JPEG oracle arithmetic, now over (frame, block)
 instances. The NotImplementedError seam for INTER-FRAME codecs
 (H.264: motion compensation, no stdlib path) remains documented.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
-map-only, zero shuffles beyond the narrow-key spread; video payloads are the widest rows in the
-corpus, so ``maxPartitionBytes`` (not row count) sizes tasks, and
-frame sampling drops (1 - 1/stride) of the decode work before the
-expensive per-frame IDCT.
+Scale notes (100 TB): one Arrow-batched ``mapInPandas`` per query
+(synth, encode and decode are stages of ``multimodal.map_stages``),
+map-only, zero shuffles beyond the narrow-key spread; video payloads
+are the widest rows in the corpus, so ``maxPartitionBytes`` (not row
+count) sizes tasks, and frame sampling drops (1 - 1/stride) of the
+decode work before the expensive per-frame IDCT.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
@@ -36,7 +35,16 @@ from ds_mapreduce_spark.operators.jpeg import (
     encode_jpeg_bytes,
     parse_jpeg,
 )
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PCM_A,
+    PCM_B,
+    Stage,
+    features_stage,
+    map_stages,
+    payload_stage,
+    pxbytes,
+    synth_stage,
+)
 
 MJPEG_N_FRAMES = 4
 MJPEG_STRIDE = 2
@@ -164,59 +172,39 @@ def parse_mjpeg_avi(payload: bytes):
 
 
 # ---------------------------------------------------------------------------
-# Spark operators
+# Codec chain stages
 # ---------------------------------------------------------------------------
 
 
-def synth_mjpeg_pixels(docs: DataFrame) -> DataFrame:
-    """(doc_id, px): MJPEG_N_FRAMES frames of constant+step blocks —
-    the JPEG synth family with the block id extended by the frame
-    index (B = frame*JPEG_BLOCKS + block), so every frame differs and
-    the closed-form oracle covers each (frame, block) instance."""
-    import numpy as np
-
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
-    n = MJPEG_N_FRAMES * JPEG_W * JPEG_H
+def _mjpeg_px(d: np.ndarray) -> list:
+    """MJPEG_N_FRAMES frames of constant+step blocks — the JPEG synth
+    family with the block id extended by the frame index
+    (B = frame*JPEG_BLOCKS + block), so every frame differs and the
+    closed-form oracle covers each (frame, block) instance."""
     per = JPEG_W * JPEG_H
-    bw = JPEG_W // 8
-    j = np.arange(n, dtype=np.int64)
+    j = np.arange(MJPEG_N_FRAMES * per, dtype=np.int64)
     bid = (
         (j // per) * JPEG_BLOCKS
-        + ((j % per) // (JPEG_W * 8)) * bw
+        + ((j % per) // (JPEG_W * 8)) * (JPEG_W // 8)
         + (j % JPEG_W) // 8
     )
     sign = np.where(j % 8 < 4, 1, -1).astype(np.int64)
-
-    def build(d):
-        dm = d[:, None] % 256
-        base = 32 + (dm * PCM_A + bid[None, :] * PCM_B) % 192
-        delta = (dm * PCM_B + bid[None, :] * PCM_A) % 32 - 16
-        return {"px": list((base + sign[None, :] * delta).astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, px array<int>", build)
+    dm = d[:, None] % 256
+    base = 32 + (dm * PCM_A + bid[None, :] * PCM_B) % 192
+    delta = (dm * PCM_B + bid[None, :] * PCM_A) % 32 - 16
+    return list((base + sign[None, :] * delta).astype(np.int32))
 
 
-def encode_mjpeg_avi(df: DataFrame) -> DataFrame:
-    """REAL video encoder: (doc_id, px flat frames) -> (doc_id,
-    payload), a standard MJPEG AVI. Arrow-batched, map-only."""
+def _mjpeg_avi_bytes(px) -> bytes:
+    """REAL video encoder: flat frames -> a standard MJPEG AVI, one
+    baseline JFIF per frame."""
     per = JPEG_W * JPEG_H
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for px in batch["px"]:
-                flat = bytes(list(px))
-                frames = [
-                    encode_jpeg_bytes(flat[f * per : (f + 1) * per], JPEG_W, JPEG_H)
-                    for f in range(MJPEG_N_FRAMES)
-                ]
-                payloads.append(encode_mjpeg_avi_bytes(frames, JPEG_W, JPEG_H))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    flat = pxbytes(px)
+    frames = [
+        encode_jpeg_bytes(flat[f * per : (f + 1) * per], JPEG_W, JPEG_H)
+        for f in range(MJPEG_N_FRAMES)
+    ]
+    return encode_mjpeg_avi_bytes(frames, JPEG_W, JPEG_H)
 
 
 MJPEG_FEATURE_SCHEMA = (
@@ -225,31 +213,35 @@ MJPEG_FEATURE_SCHEMA = (
 )
 
 
-def decode_mjpeg_features(media: DataFrame, stride: int = MJPEG_STRIDE) -> DataFrame:
+def _mjpeg_features(doc_id, payload: bytes, stride: int) -> list[tuple]:
     """REAL video decode + temporal frame-sampling: full AVI parse,
     keep every ``stride``-th frame, features over the SAMPLED frames'
     reconstructed pixels. Parity against the closed-form oracle proves
     container + per-frame codec + sampling end-to-end."""
+    w, h, frames = parse_mjpeg_avi(payload)
+    sampled = frames[::stride]
+    a = np.concatenate(
+        [np.frombuffer(f, dtype=np.uint8) for f in sampled]
+    ).astype(np.int64) if sampled else np.zeros(0, np.int64)
+    return [(w, h, len(frames), len(sampled), int(a.sum()), int((a * a).sum()))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_frames", "n_sampled",
-                "sum_v", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, frames = parse_mjpeg_avi(bytes(payload))
-                sampled = frames[::stride]
-                a = np.concatenate(
-                    [np.frombuffer(f, dtype=np.uint8) for f in sampled]
-                ).astype(np.int64) if sampled else np.zeros(0, np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["sum_v"].append(int(a.sum()))
-                rows["sum_sq"].append(int((a * a).sum()))
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=MJPEG_FEATURE_SCHEMA)
+def decode_mjpeg_stage(stride: int = MJPEG_STRIDE) -> Stage:
+    """(doc_id, AVI payload) -> MJPEG_FEATURE_SCHEMA over every
+    ``stride``-th frame."""
+    return features_stage(
+        MJPEG_FEATURE_SCHEMA, lambda d, p: _mjpeg_features(d, p, stride)
+    )
+
+
+#: (doc_id) -> (doc_id, px flat frames)
+SYNTH_MJPEG = synth_stage("px array<int>", _mjpeg_px)
+#: (doc_id, px) -> (doc_id, MJPEG AVI payload)
+ENCODE_MJPEG_AVI = payload_stage(lambda _, px: _mjpeg_avi_bytes(px), "px")
+
+
+def decode_mjpeg_features(
+    media: DataFrame, stride: int = MJPEG_STRIDE
+) -> DataFrame:
+    """``decode_mjpeg_stage(stride)`` alone, over (doc_id, payload)."""
+    return map_stages(media, decode_mjpeg_stage(stride))

@@ -38,8 +38,9 @@ join, so parity grades the VBR index choice, the padding bits, and
 the total container size byte-for-byte — without the oracle seeing a
 payload byte.
 
-Scale notes (100 TB): identical plan shape to the MDCT row — two
-chained Arrow-batched ``mapInPandas``, map-only, zero data-bearing
+Scale notes (100 TB): identical plan shape to the MDCT row — one
+Arrow-batched ``mapInPandas`` running synth, encode and decode as
+stages (``multimodal.map_stages``), map-only, zero data-bearing
 shuffles beyond the narrow-key spread. Frames are decode-independent
 after the tag (the granule syntax carries no cross-frame state), so
 a real corpus can split one payload's frames across tasks after a
@@ -52,11 +53,7 @@ container-format seam (`operators/multimodal.py` r9 note).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
     BitReader,
@@ -69,7 +66,11 @@ from ds_mapreduce_spark.operators.mdct import (
     granules_to_samples,
     read_granule,
 )
-from ds_mapreduce_spark.operators.multimodal import pcm_feature_sums
+from ds_mapreduce_spark.operators.multimodal import (
+    features_stage,
+    payload_stage,
+    pcm_feature_sums,
+)
 
 #: MPEG-1 Layer III bitrate table (kbps), index 1..14 (0 = free, 15 =
 #: forbidden — both rejected on parse), ISO 11172-3 table B.2
@@ -250,57 +251,27 @@ def decode_mp3_samples(payload: bytes) -> tuple[list[tuple[int, int]], list[int]
     return headers, granules_to_samples(n_samples, granules)
 
 
-def encode_mp3(df: DataFrame) -> DataFrame:
-    """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_mp3_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: (doc_id, samples) -> (doc_id, MP3-framed payload)
+ENCODE_MP3 = payload_stage(lambda _, s: encode_mp3_bytes(s), "samples")
 
 
-def decode_mp3_features(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> container census + exact-integer amplitude
-    features of the reconstructed audio. ``duration_ms`` is the
-    CONTAINER's duration claim (frames x 1152 / 44100 — what every MP3
-    tool reports), distinct from the payload's true sample count —
-    both are graded. sum_bitrate_kbps / n_padded / container_bytes
-    grade the VBR frame-size choices byte-for-byte."""
+def _mp3_features(doc_id, payload: bytes) -> list[tuple]:
+    """Container census + exact-integer amplitude features of the
+    reconstructed audio. ``duration_ms`` is the CONTAINER's duration
+    claim (frames x 1152 / 44100 — what every MP3 tool reports),
+    distinct from the payload's true sample count — both are graded.
+    sum_bitrate_kbps / n_padded / container_bytes grade the VBR
+    frame-size choices byte-for-byte."""
+    headers, samples = decode_mp3_samples(payload)
+    return [(
+        len(headers), len(samples), MP3_SAMPLE_RATE,
+        len(headers) * MP3_FRAME_SAMPLES * 1000 // MP3_SAMPLE_RATE,
+        sum(MP3_BITRATES[i] for i, _ in headers),
+        sum(pad for _, pad in headers),
+        len(payload),
+        *pcm_feature_sums(samples),
+    )]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "n_frames", "n_samples", "declared_hz",
-                    "duration_ms", "sum_bitrate_kbps", "n_padded",
-                    "container_bytes", "peak_abs", "sum_abs", "sum_sq",
-                )
-            }
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                payload = bytes(payload)
-                headers, samples = decode_mp3_samples(payload)
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(len(headers))
-                rows["n_samples"].append(len(samples))
-                rows["declared_hz"].append(MP3_SAMPLE_RATE)
-                rows["duration_ms"].append(
-                    len(headers) * MP3_FRAME_SAMPLES * 1000 // MP3_SAMPLE_RATE
-                )
-                rows["sum_bitrate_kbps"].append(
-                    sum(MP3_BITRATES[i] for i, _ in headers)
-                )
-                rows["n_padded"].append(sum(pad for _, pad in headers))
-                rows["container_bytes"].append(len(payload))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=MP3_FEATURE_SCHEMA)
+#: (doc_id, payload) -> MP3_FEATURE_SCHEMA
+DECODE_MP3 = features_stage(MP3_FEATURE_SCHEMA, _mp3_features)

@@ -3,16 +3,19 @@
 Images/audio/video are carried as opaque ``binary`` columns plus a
 typed metadata struct; heavy per-item work (decode, resize,
 frame-sample, feature-extract) runs as Arrow-batched ``mapInPandas``
-so bytes move executor→Python once per batch, never per row.
+so bytes move executor→Python once per batch, never per row. A codec
+chain (synth -> encode -> wrap/resize/decimate -> decode) runs all its
+steps as stages of ONE ``mapInPandas`` (``map_stages``), so the batch
+crosses once per query, not once per step.
 
 Two decode tiers (r8): for CODEC-FREE container formats — WAV/PCM16
 (stdlib ``wave``) and binary PPM (header + raw bytes) — the decode is
 REAL: genuine containers are encoded and the decoder parses the
-container header rather than assuming it (``encode_wav``/
-``decode_wav_features``, ``encode_ppm``/``decode_ppm_features``),
+container header rather than assuming it (``ENCODE_WAV``/
+``DECODE_WAV``, ``ENCODE_PPM``/``DECODE_PPM``),
 with oracle parity proving the roundtrip preserves every sample.
 A third tier (r9) is a REAL COMPRESSED codec: PNG, implemented from
-the spec with stdlib zlib (``encode_png``/``decode_png_features`` —
+the spec with stdlib zlib (``ENCODE_PNG``/``DECODE_PNG`` —
 DEFLATE scanlines, all five predictive filters, CRC-verified chunks).
 A fourth tier (r9) is a REAL LOSSY codec: baseline JPEG from the ITU
 T.81 spec (``operators/jpeg.py`` — fixed-point DCT, quantization,
@@ -39,8 +42,13 @@ whole point of keeping media opaque-but-columnar.
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from collections.abc import Iterator
+import io
+import struct
+import wave
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -241,10 +249,51 @@ PPM_WIDTH = 24
 PPM_HEIGHT = 16
 
 
-def synth_map_arrays(docs: DataFrame, schema: str, build) -> DataFrame:
-    """Arrow-batched payload synthesizer: ``build(doc_ids int64
-    ndarray) -> {col: list-of-per-doc-values}`` rendered in vectorized
-    numpy inside ``mapInPandas``.
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
+
+
+class Stage(NamedTuple):
+    """One step of a codec chain (synth, encode, wrap, resize, decode):
+    ``fn`` maps one pandas batch to the next, ``schema`` is the DDL of
+    the frame it returns."""
+
+    fn: Callable[[pd.DataFrame], pd.DataFrame]
+    schema: str
+
+
+def map_stages(df: DataFrame, *stages: Stage) -> DataFrame:
+    """Run a codec chain in ONE ``mapInPandas``: every stage, in order,
+    on each Arrow batch, emitting only the last stage's columns.
+
+    This is the only ``mapInPandas`` site of the codec chains. A node
+    per step would ship the payload JVM -> Python -> JVM once per step
+    and pay a Python worker start and init per step and task; fused,
+    the batch crosses once and only the features come back. The
+    intermediates are still real container bytes (JFIF, RIFF, MCV1,
+    Annex-B, ...) and every decoder still parses them — a stage never
+    hands pixels or samples past the container. The map side of the
+    paper's split -> map -> group -> reduce stays one task-local pass.
+    Every stage maps a batch with no rows to an empty frame of its own
+    columns, so an empty partition comes back correctly typed."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            for stage in stages:
+                batch = stage.fn(batch)
+            yield batch
+
+    return df.mapInPandas(run, schema=stages[-1].schema)
+
+
+def _synth(batch: pd.DataFrame, col: str, build) -> pd.DataFrame:
+    d = batch["doc_id"].to_numpy(dtype="int64")
+    return pd.DataFrame({"doc_id": d, col: build(d)})
+
+
+def synth_stage(col_ddl: str, build) -> Stage:
+    """Payload-synth stage (doc_id) -> (doc_id, col): ``build(doc_ids
+    int64 ndarray)`` returns one value per doc, rendered in vectorized
+    numpy.
 
     Every synth in the codec family is a linear-congruential closed
     form over (doc_id, element index) — pure integer arithmetic that
@@ -260,70 +309,90 @@ def synth_map_arrays(docs: DataFrame, schema: str, build) -> DataFrame:
     JVM user time, gc 0.05 s, steal 0, zero foreign processes — a
     run-level bimodal entirely decided by which expression-type
     profiles C2 happened to see first. numpy renders the identical
-    int64 arithmetic ~10x faster, deterministically, and the synth was
-    already feeding a mapInPandas chain, so this removes the codec
-    family's only JVM-side hotspot instead of adding a Python seam."""
-    import numpy as np
-    import pandas as pd
+    int64 arithmetic ~10x faster, deterministically, as the first
+    stage of the chain's one ``mapInPandas``."""
+    col = col_ddl.split()[0]
+    return Stage(
+        functools.partial(_synth, col=col, build=build),
+        f"doc_id bigint, {col_ddl}",
+    )
 
-    def run(batches):
-        for batch in batches:
-            d = batch["doc_id"].to_numpy(dtype="int64")
-            cols = {"doc_id": d}
-            cols.update(build(d))
-            yield pd.DataFrame(cols)
 
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+def _per_payload(batch: pd.DataFrame, col: str, encode) -> pd.DataFrame:
+    return pd.DataFrame({
+        "doc_id": batch["doc_id"].values,
+        "payload": [encode(d, v) for d, v in zip(batch["doc_id"], batch[col])],
+    })
+
+
+def payload_stage(encode, col: str = "payload") -> Stage:
+    """Encode/transform stage (doc_id, col) -> (doc_id, payload):
+    ``encode(doc_id, value)`` returns one container per row."""
+    return Stage(
+        functools.partial(_per_payload, col=col, encode=encode),
+        PAYLOAD_SCHEMA,
+    )
+
+
+def _per_row(batch: pd.DataFrame, names: tuple, decode) -> pd.DataFrame:
+    rows = [
+        (d, *r)
+        for d, p in zip(batch["doc_id"], batch["payload"])
+        for r in decode(d, bytes(p))
+    ]
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    return pd.DataFrame({n: list(c) for n, c in zip(names, cols)})
+
+
+def features_stage(schema: str, decode) -> Stage:
+    """Decode stage (doc_id, payload) -> ``schema``: ``decode(doc_id,
+    payload bytes)`` returns the output rows of one payload, each a
+    tuple of the columns after doc_id (one row per payload, or one per
+    frame for the frame-exploding video decoders). ``schema`` is a
+    flat DDL whose first column is doc_id."""
+    names = tuple(f.split()[0] for f in schema.split(","))
+    return Stage(
+        functools.partial(_per_row, names=names, decode=decode), schema
+    )
+
+
+def _pcm_samples(d: np.ndarray) -> list:
+    """Deterministic PCM16 samples in [-32768, 32767], sample i =
+    (((doc_id mod 2^16)*PCM_A + i*PCM_B) mod 2^16) - 2^15 — exactly
+    reproducible in ANSI SQL (the oracles replay this closed form).
+    doc_id is pre-reduced mod 2^16 BEFORE the multiply (identical
+    result — (d mod m)*A ≡ d*A (mod m) — and the product then tops out
+    at ~1.7e14, inside the BIGINT budget at ANY doc_id; the raw
+    doc_id*PCM_A form would silently wrap in Spark and raise in DuckDB
+    once doc_id passes ~3.5e9 — the repo-wide 128-bit rule)."""
+    i = np.arange(WAV_N_SAMPLES, dtype=np.int64)
+    arr = ((d[:, None] % 65536) * PCM_A + i[None, :] * PCM_B) % 65536 - 32768
+    return list(arr.astype(np.int32))
+
+
+#: (doc_id) -> (doc_id, samples): the audio rows' shared synth
+SYNTH_PCM = synth_stage("samples array<int>", _pcm_samples)
 
 
 def synth_pcm_samples(docs: DataFrame) -> DataFrame:
-    """(doc_id, samples): deterministic PCM16 samples in [-32768, 32767],
-    sample i = (((doc_id mod 2^16)*PCM_A + i*PCM_B) mod 2^16) - 2^15 —
-    exactly reproducible in ANSI SQL (the oracles replay this closed
-    form). doc_id is pre-reduced mod 2^16 BEFORE the multiply
-    (identical result — (d mod m)*A ≡ d*A (mod m) — and the product
-    then tops out at ~1.7e14, inside the BIGINT budget at ANY doc_id;
-    the raw doc_id*PCM_A form would silently wrap in Spark and raise
-    in DuckDB once doc_id passes ~3.5e9 — the CLAUDE.md 128-bit rule).
-    Rendered in vectorized numpy via ``synth_map_arrays`` (see its
-    docstring for why not transform(sequence(...)))."""
-    import numpy as np
-
-    i = np.arange(WAV_N_SAMPLES, dtype=np.int64)
-
-    def build(d):
-        arr = ((d[:, None] % 65536) * PCM_A + i[None, :] * PCM_B) % 65536 - 32768
-        return {"samples": list(arr.astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, samples array<int>", build)
+    """(doc_id, samples) for each doc: ``SYNTH_PCM`` alone."""
+    return map_stages(docs.select("doc_id"), SYNTH_PCM)
 
 
-def encode_wav(df: DataFrame) -> DataFrame:
-    """REAL WAV encoder (stdlib ``wave``): (doc_id, samples) ->
-    (doc_id, payload) where payload is a complete RIFF/WAVE container
-    (44-byte header + PCM16LE mono frames). Arrow-batched, map-only."""
-    import io
-    import struct
-    import wave
+def wav_bytes(samples, rate: int = WAV_SAMPLE_RATE) -> bytes:
+    """A complete mono PCM16 RIFF/WAVE container (stdlib ``wave``:
+    44-byte header + PCM16LE frames)."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for samples in batch["samples"]:
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(WAV_SAMPLE_RATE)
-                    w.writeframes(
-                        struct.pack(f"<{len(samples)}h", *samples)
-                    )
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
 
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: REAL WAV encoder: (doc_id, samples) -> (doc_id, RIFF/WAVE payload)
+ENCODE_WAV = payload_stage(lambda _, samples: wav_bytes(samples), "samples")
 
 
 WAV_FEATURE_SCHEMA = (
@@ -334,7 +403,7 @@ WAV_FEATURE_SCHEMA = (
 
 def pxbytes(arr) -> bytes:
     """Exact fast equivalent of ``bytes(list(arr))`` for the integer
-    numpy arrays Arrow hands the encode operators (r17): one vectorized
+    numpy arrays the synth stages hand the encoders (r17): one vectorized
     range check then a C-speed uint8 copy, where the list form paid a
     per-element Python conversion per pixel. Raises ValueError on any
     value outside 0..255 — the same contract ``bytes()`` enforced."""
@@ -356,6 +425,13 @@ def pcm_feature_sums(samples) -> tuple[int, int, int]:
     return int(a.max()), int(a.sum()), int((arr * arr).sum())
 
 
+def pcm_rows(rate: int, samples) -> list[tuple]:
+    """The ``WAV_FEATURE_SCHEMA`` row (after doc_id) of one decoded
+    signal — shared by the WAV, mu-law, ADPCM and FLAC decoders. A
+    zero-sample signal is legal: its amplitude features are 0."""
+    return [(rate, len(samples), *pcm_feature_sums(samples))]
+
+
 def read_pcm16_wav(payload: bytes, doc_id="?") -> tuple[int, int, tuple]:
     """Parse a mono PCM16 RIFF/WAVE payload -> (rate, n, samples).
 
@@ -367,10 +443,6 @@ def read_pcm16_wav(payload: bytes, doc_id="?") -> tuple[int, int, tuple]:
     surfaces as struct.error from the fixed-width unpack (ADVICE r9
     item 4). All container reads stay INSIDE the with block — the wave
     module does not document post-close param access (ADVICE r8)."""
-    import io
-    import struct
-    import wave
-
     try:
         with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
             if w.getnchannels() != 1 or w.getsampwidth() != 2:
@@ -397,65 +469,42 @@ def read_pcm16_wav(payload: bytes, doc_id="?") -> tuple[int, int, tuple]:
     return rate, n, samples
 
 
-def decode_wav_features(media: DataFrame) -> DataFrame:
+def _wav_features(doc_id, payload: bytes) -> list[tuple]:
     """REAL WAV decoder: parses the RIFF header (channel count, sample
     width, frame rate all read from the CONTAINER, not assumed),
     unpacks the PCM frames, and emits exact-integer amplitude features.
     Raises ValueError on a malformed container or unexpected layout — a
     corrupt payload fails loudly instead of producing silent garbage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, n, samples = read_pcm16_wav(payload, doc_id)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                # A zero-frame WAV is a LEGAL container: features are 0,
-                # not a bare ValueError from max() on empty.
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+    rate, _n, samples = read_pcm16_wav(payload, doc_id)
+    return pcm_rows(rate, samples)
 
 
-def synth_ppm_pixels(docs: DataFrame) -> DataFrame:
-    """(doc_id, px): deterministic RGB bytes, px[i] =
-    ((doc_id mod 256)*PCM_A + i*PCM_B) mod 256 for i < W*H*3 — doc_id
-    pre-reduced mod 256 for the same BIGINT-budget reason as
-    synth_pcm_samples (identical values, overflow-proof). numpy-rendered
-    (``synth_map_arrays``)."""
-    import numpy as np
-
-    n = PPM_WIDTH * PPM_HEIGHT * 3
-    i = np.arange(n, dtype=np.int64)
-
-    def build(d):
-        arr = ((d[:, None] % 256) * PCM_A + i[None, :] * PCM_B) % 256
-        return {"px": list(arr.astype(np.int32))}
-
-    return synth_map_arrays(docs, "doc_id bigint, px array<int>", build)
+#: (doc_id, payload) -> WAV_FEATURE_SCHEMA
+DECODE_WAV = features_stage(WAV_FEATURE_SCHEMA, _wav_features)
 
 
-def encode_ppm(df: DataFrame) -> DataFrame:
-    """REAL binary-PPM (P6) encoder: header + raw RGB bytes."""
+def decode_wav_features(media: DataFrame) -> DataFrame:
+    """``DECODE_WAV`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_WAV)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"P6\n{PPM_WIDTH} {PPM_HEIGHT}\n255\n".encode()
-        for batch in batches:
-            payloads = [header + pxbytes(px) for px in batch["px"]]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
 
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+def _ppm_px(d: np.ndarray) -> list:
+    """Deterministic RGB bytes, px[i] = ((doc_id mod 256)*PCM_A +
+    i*PCM_B) mod 256 for i < W*H*3 — doc_id pre-reduced mod 256 for
+    the same BIGINT-budget reason as ``_pcm_samples`` (identical
+    values, overflow-proof)."""
+    i = np.arange(PPM_WIDTH * PPM_HEIGHT * 3, dtype=np.int64)
+    arr = ((d[:, None] % 256) * PCM_A + i[None, :] * PCM_B) % 256
+    return list(arr.astype(np.int32))
+
+
+#: (doc_id) -> (doc_id, px): the RGB image rows' shared synth
+SYNTH_PPM = synth_stage("px array<int>", _ppm_px)
+
+_PPM_HEADER = f"P6\n{PPM_WIDTH} {PPM_HEIGHT}\n255\n".encode()
+
+#: REAL binary-PPM (P6) encoder: header + raw RGB bytes
+ENCODE_PPM = payload_stage(lambda _, px: _PPM_HEADER + pxbytes(px), "px")
 
 
 PPM_FEATURE_SCHEMA = (
@@ -496,31 +545,26 @@ def _parse_ppm(payload: bytes):
     return w, h, px
 
 
+def _rgb_sums(w: int, h: int, px: bytes) -> list[tuple]:
+    """Per-channel exact sums of a decoded RGB raster — the feature row
+    shared by the PPM, PNG and (palette-mapped) GIF decoders."""
+    return [(w, h, sum(px[0::3]), sum(px[1::3]), sum(px[2::3]))]
+
+
+#: REAL PPM decoder: parses the P6 header (magic, dimensions, maxval —
+#: from the container), validates the pixel-buffer length against the
+#: parsed dimensions, and emits per-channel exact sums.
+DECODE_PPM = features_stage(
+    PPM_FEATURE_SCHEMA, lambda _, payload: _rgb_sums(*_parse_ppm(payload))
+)
+
+
 def decode_ppm_features(media: DataFrame) -> DataFrame:
-    """REAL PPM decoder: parses the P6 header (magic, dimensions,
-    maxval — from the container), validates the pixel-buffer length
-    against the parsed dimensions, and emits per-channel exact sums."""
-    parse = _parse_ppm
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum(px[0::3]))
-                rows["sum_g"].append(sum(px[1::3]))
-                rows["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+    """``DECODE_PPM`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_PPM)
 
 
-def resize_ppm_nearest(media: DataFrame, factor: int = 2) -> DataFrame:
+def _resize_ppm_bytes(payload: bytes, factor: int) -> bytes:
     """REAL image resize, codec-free tier (r9): parse the P6 container
     (shared ``_parse_ppm`` — same parser as the feature decoder),
     nearest-neighbor downsample by integer ``factor``
@@ -529,33 +573,30 @@ def resize_ppm_nearest(media: DataFrame, factor: int = 2) -> DataFrame:
     'resize' leg of the mandated decode/feature/resize/frame-sample
     surface with a real container->container transform instead of the
     signature stub (``resize_stub`` remains the seam for true-codec
-    formats). Arrow-batched, map-only; output payload is ~factor²
-    smaller, so downstream feature scans shrink accordingly. Corrupt
-    or dimension-mismatched containers raise via the shared parser."""
+    formats). The output payload is ~factor² smaller, so downstream
+    feature scans shrink accordingly. Corrupt or dimension-mismatched
+    containers raise via the shared parser."""
+    w, h, px = _parse_ppm(payload)
+    nw, nh = w // factor, h // factor
+    if nw < 1 or nh < 1:
+        raise ValueError(f"resize factor {factor} collapses {w}x{h} to zero")
+    out = bytearray()
+    for y in range(nh):
+        row0 = y * factor * w
+        for x in range(nw):
+            i = (row0 + x * factor) * 3
+            out += px[i : i + 3]
+    return f"P6\n{nw} {nh}\n255\n".encode() + bytes(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for payload in batch["payload"]:
-                w, h, px = _parse_ppm(bytes(payload))
-                nw, nh = w // factor, h // factor
-                if nw < 1 or nh < 1:
-                    raise ValueError(
-                        f"resize factor {factor} collapses {w}x{h} to zero"
-                    )
-                out = bytearray()
-                for y in range(nh):
-                    row0 = y * factor * w
-                    for x in range(nw):
-                        i = (row0 + x * factor) * 3
-                        out += px[i : i + 3]
-                header = f"P6\n{nw} {nh}\n255\n".encode()
-                payloads.append(header + bytes(out))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
 
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+def resize_ppm_stage(factor: int = 2) -> Stage:
+    """(doc_id, P6 payload) -> (doc_id, P6 payload resized by 1/factor)."""
+    return payload_stage(lambda _, p: _resize_ppm_bytes(bytes(p), factor))
+
+
+def resize_ppm_nearest(media: DataFrame, factor: int = 2) -> DataFrame:
+    """``resize_ppm_stage(factor)`` alone, over (doc_id, payload)."""
+    return map_stages(media, resize_ppm_stage(factor))
 
 
 # ---------------------------------------------------------------------------
@@ -763,55 +804,31 @@ def _parse_png(payload: bytes):
     return w, h, _png_unfilter(raw, w, h)
 
 
-def encode_png(df: DataFrame) -> DataFrame:
-    """REAL PNG encoder: (doc_id, px flat RGB ints) -> (doc_id, payload)
-    where payload is a standard, any-viewer-openable PNG (DEFLATE
-    scanlines, all-five-filter schedule, CRC'd chunks). Arrow-batched,
-    map-only. Scale note: per-byte Python filtering is fine at these
-    thumbnail dims; production-size rasters would numpy-vectorize the
-    filter loops inside the SAME mapInPandas batch — the plan shape
-    (zero shuffles beyond the narrow-key spread, payload written columnar) is the part that carries
-    to 100 TB unchanged."""
+#: REAL PNG encoder: (doc_id, px flat RGB ints) -> (doc_id, payload),
+#: a standard, any-viewer-openable PNG (DEFLATE scanlines,
+#: all-five-filter schedule, CRC'd chunks). Scale note: per-byte Python
+#: filtering is fine at these thumbnail dims; production-size rasters
+#: would numpy-vectorize the filter loops inside the SAME batch stage.
+ENCODE_PNG = payload_stage(
+    lambda _, px: _encode_png_bytes(pxbytes(px), PPM_WIDTH, PPM_HEIGHT), "px"
+)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                _encode_png_bytes(pxbytes(px), PPM_WIDTH, PPM_HEIGHT)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+#: REAL PNG decoder: full container parse (_parse_png — CRC-verified
+#: chunks, IHDR geometry, multi-IDAT inflate, all-five-filter
+#: reconstruction) then per-channel exact sums. Same feature schema as
+#: the PPM decoder, so the analytic oracle is shared verbatim: parity
+#: proves DEFLATE + filter prediction round-tripped every pixel.
+DECODE_PNG = features_stage(
+    PPM_FEATURE_SCHEMA, lambda _, payload: _rgb_sums(*_parse_png(payload))
+)
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
-    """REAL PNG decoder: full container parse (_parse_png — CRC-verified
-    chunks, IHDR geometry, multi-IDAT inflate, all-five-filter
-    reconstruction) then per-channel exact sums. Same feature schema as
-    the PPM decoder, so the analytic oracle is shared verbatim: parity
-    proves DEFLATE + filter prediction round-tripped every pixel."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = _parse_png(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum(px[0::3]))
-                rows["sum_g"].append(sum(px[1::3]))
-                rows["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+    """``DECODE_PNG`` alone, over (doc_id, payload)."""
+    return map_stages(media, DECODE_PNG)
 
 
-def decimate_wav(media: DataFrame, stride: int = 4) -> DataFrame:
+def _decimate_wav_bytes(doc_id, payload: bytes, stride: int) -> bytes:
     """REAL audio frame-sampling, codec-free tier (r9): parse the
     RIFF/WAVE container with the stdlib ``wave`` reader (channels /
     width / rate / frame count all from the header, mismatches raise),
@@ -819,27 +836,19 @@ def decimate_wav(media: DataFrame, stride: int = 4) -> DataFrame:
     form of video frame-sampling), and RE-ENCODE a genuine WAV at
     rate // stride. Closes the 'frame-sample' leg of the mandated
     multimodal surface with a real container->container transform.
-    Corrupt payloads raise ValueError (via read_pcm16_wav).
-    Arrow-batched, map-only; output payloads shrink ~stride×."""
-    import io
-    import struct
-    import wave
+    Corrupt payloads raise ValueError (via read_pcm16_wav); output
+    payloads shrink ~stride×."""
+    rate, _n, samples = read_pcm16_wav(payload, doc_id)
+    return wav_bytes(samples[::stride], max(1, rate // stride))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, n, samples = read_pcm16_wav(payload, doc_id)
-                kept = samples[::stride]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wout:
-                    wout.setnchannels(1)
-                    wout.setsampwidth(2)
-                    wout.setframerate(max(1, rate // stride))
-                    wout.writeframes(struct.pack(f"<{len(kept)}h", *kept))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
 
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+def decimate_wav_stage(stride: int = 4) -> Stage:
+    """(doc_id, WAV payload) -> (doc_id, WAV payload decimated by stride)."""
+    return payload_stage(
+        lambda d, p: _decimate_wav_bytes(d, bytes(p), stride)
+    )
+
+
+def decimate_wav(media: DataFrame, stride: int = 4) -> DataFrame:
+    """``decimate_wav_stage(stride)`` alone, over (doc_id, payload)."""
+    return map_stages(media, decimate_wav_stage(stride))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ds_mapreduce_spark.operators.multimodal import (
     attach_binary_payload,
     extract_features,
+    map_stages,
     sample_frames,
 )
 from ds_mapreduce_spark.plans.registry import register
@@ -235,16 +236,16 @@ FROM s GROUP BY doc_id
     "multimodal_wav_roundtrip",
     oracle=_wav_oracle(),
     doc="REAL audio decode, codec-free tier (r8): deterministic PCM16 "
-    "samples (pure JVM integer expression) -> a GENUINE RIFF/WAVE "
-    "container built by the stdlib `wave` encoder in one Arrow batch "
-    "pass -> a second pass that PARSES the container (channels, sample "
+    "samples (numpy closed form) -> a GENUINE RIFF/WAVE "
+    "container built by the stdlib `wave` encoder -> a decode stage "
+    "in the same Arrow batch pass that PARSES the container (channels, sample "
     "width, rate, frame count all read from the header, mismatches "
     "raise) and unpacks the PCM frames into exact-integer amplitude "
     "features. The oracle computes the same features analytically from "
     "the sample formula and never sees a WAV byte — parity therefore "
     "proves the encode->decode roundtrip preserved every sample "
     "bit-for-bit, i.e. the decoder is real, not a checksum stub. "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; at 100 TB "
+    "Plan: one mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; at 100 TB "
     "payload width (not row count) sizes tasks via maxPartitionBytes "
     "and features are written columnar so the payload prunes away. "
     "The stub seam now remains only for MP3/H.264 (JPEG became real "
@@ -252,13 +253,14 @@ FROM s GROUP BY doc_id
 )
 def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.multimodal import (
-        decode_wav_features,
-        encode_wav,
-        synth_pcm_samples,
+        DECODE_WAV,
+        ENCODE_WAV,
+        SYNTH_PCM,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_wav_features(encode_wav(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_WAV, DECODE_WAV
+    )
 
 
 def _ppm_oracle() -> str:
@@ -295,18 +297,19 @@ FROM px GROUP BY doc_id
     "dimensions before emitting per-channel exact sums. Same "
     "analytic-oracle construction as multimodal_wav_roundtrip: parity "
     "proves the container roundtrip, not just the arithmetic. Map-only "
-    "two-pass mapInPandas, zero shuffles beyond the narrow-key spread. See "
+    "single mapInPandas, zero shuffles beyond the narrow-key spread. See "
     "operators/multimodal.py:decode_ppm_features.",
 )
 def q_multimodal_ppm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.multimodal import (
-        decode_ppm_features,
-        encode_ppm,
-        synth_ppm_pixels,
+        DECODE_PPM,
+        ENCODE_PPM,
+        SYNTH_PPM,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_ppm_features(encode_ppm(synth_ppm_pixels(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PPM, ENCODE_PPM, DECODE_PPM
+    )
 
 
 def _ppm_resize_oracle(factor: int = 2) -> str:
@@ -353,22 +356,22 @@ FROM px GROUP BY doc_id
     "proves the full parse->resample->re-encode->parse chain "
     "preserved exactly the expected pixels. Closes the 'resize' leg "
     "of the mandated multimodal surface as REAL (the stub remains "
-    "only for true-codec formats). Three chained mapInPandas, "
+    "only for true-codec formats). One mapInPandas, "
     "map-only, zero shuffles beyond the narrow-key spread; resize shrinks payloads 4x so the "
     "second decode scans a quarter of the bytes. See "
     "operators/multimodal.py:resize_ppm_nearest.",
 )
 def q_multimodal_ppm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.multimodal import (
-        decode_ppm_features,
-        encode_ppm,
-        resize_ppm_nearest,
-        synth_ppm_pixels,
+        DECODE_PPM,
+        ENCODE_PPM,
+        SYNTH_PPM,
+        resize_ppm_stage,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_ppm_features(
-        resize_ppm_nearest(encode_ppm(synth_ppm_pixels(docs)), factor=2)
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PPM, ENCODE_PPM,
+        resize_ppm_stage(factor=2), DECODE_PPM,
     )
 
 
@@ -389,20 +392,21 @@ def q_multimodal_ppm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one-place rule), so parity proves DEFLATE + filter prediction "
     "preserved every pixel bit-for-bit. Lossless image compression is "
     "real here; the lossy tiers are real too (JPEG gray+color, G.711, "
-    "MJPEG-AVI) — the stub seam now covers only MP3/H.264. Plan: two "
-    "chained mapInPandas, map-only, ZERO data-bearing shuffles beyond "
-    "the narrow-key spread; compressed payloads shrink the bytes that "
-    "cross executor->Python. See operators/multimodal.py:_parse_png.",
+    "MJPEG-AVI) — the stub seam now covers only MP3/H.264. Plan: one "
+    "mapInPandas, map-only, ZERO data-bearing shuffles beyond "
+    "the narrow-key spread; compressed payloads shrink the bytes "
+    "written. See operators/multimodal.py:_parse_png.",
 )
 def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.multimodal import (
-        decode_png_features,
-        encode_png,
-        synth_ppm_pixels,
+        DECODE_PNG,
+        ENCODE_PNG,
+        SYNTH_PPM,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_png_features(encode_png(synth_ppm_pixels(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PPM, ENCODE_PNG, DECODE_PNG
+    )
 
 
 def _ulaw_oracle() -> str:
@@ -476,19 +480,17 @@ FROM r GROUP BY doc_id
     "IDENTICAL PCM (tests/test_codec_interchange.py). The features "
     "share the PCM WAV decoder's schema, so this row's delta vs "
     "multimodal_wav_roundtrip measures exactly what companding cost. "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; mu-law "
-    "halves the bytes crossing executor->Python vs PCM16. See "
+    "Plan: one mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; mu-law "
+    "halves the payload bytes vs PCM16. See "
     "operators/g711.py:parse_ulaw_wav.",
 )
 def q_multimodal_ulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_mapreduce_spark.operators.g711 import (
-        decode_ulaw_features,
-        encode_ulaw,
-    )
-    from ds_mapreduce_spark.operators.multimodal import synth_pcm_samples
+    from ds_mapreduce_spark.operators.g711 import DECODE_ULAW, ENCODE_ULAW
+    from ds_mapreduce_spark.operators.multimodal import SYNTH_PCM
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_ulaw_features(encode_ulaw(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_ULAW, DECODE_ULAW
+    )
 
 
 def _gif_oracle() -> str:
@@ -534,18 +536,19 @@ FROM px GROUP BY doc_id
     "(javax.imageio, a decoder sharing zero code with ours) "
     "reconstructs our GIF and PNG files pixel-EXACTLY and our JPEG "
     "within the T.81-permitted +-1 (tests/test_codec_interchange.py). "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread. See "
+    "Plan: one mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread. See "
     "operators/gif.py:parse_gif.",
 )
 def q_multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.gif import (
-        decode_gif_features,
-        encode_gif,
-        synth_gif_indices,
+        DECODE_GIF,
+        ENCODE_GIF,
+        SYNTH_GIF,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_gif_features(encode_gif(synth_gif_indices(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_GIF, ENCODE_GIF, DECODE_GIF
+    )
 
 
 def _wav_decimate_oracle(stride: int = 4) -> str:
@@ -806,19 +809,21 @@ FROM px GROUP BY doc_id
     "reconstruction, and the inverse transform — parity grades "
     "color JPEG end-to-end bit-exactly. OpenJDK ImageIO decodes our "
     "color files within the expected IDCT+color variance "
-    "(tests/test_codec_interchange.py). Plan: two chained "
+    "(tests/test_codec_interchange.py). Plan: one "
     "mapInPandas after the narrow-key spread. See "
     "operators/jpeg.py:encode_jpeg_color_bytes.",
 )
 def q_multimodal_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.jpeg import (
-        decode_jpeg_color_features,
-        encode_jpeg_color,
-        synth_color_jpeg_pixels,
+        DECODE_JPEG_COLOR,
+        ENCODE_JPEG_COLOR,
+        SYNTH_JPEG_COLOR,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_jpeg_color_features(encode_jpeg_color(synth_color_jpeg_pixels(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_JPEG_COLOR, ENCODE_JPEG_COLOR,
+        DECODE_JPEG_COLOR,
+    )
 
 
 def _mjpeg_oracle() -> str:
@@ -873,21 +878,23 @@ FROM fx GROUP BY doc_id
     "parser and cross-checks dimensions and counts against the "
     "header. The oracle reuses the fixed-point JPEG closed form over "
     "the sampled (frame, block) instances, so parity proves container "
-    "walk + per-frame lossy decode + sampling end-to-end. Plan: two "
-    "chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; sampling drops "
+    "walk + per-frame lossy decode + sampling end-to-end. Plan: one "
+    "mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; sampling drops "
     "half the IDCT work, and at 100 TB video payloads are the widest "
     "rows so maxPartitionBytes sizes tasks. See "
     "operators/mjpeg_avi.py:parse_mjpeg_avi.",
 )
 def q_multimodal_mjpeg_avi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.mjpeg_avi import (
-        decode_mjpeg_features,
-        encode_mjpeg_avi,
-        synth_mjpeg_pixels,
+        ENCODE_MJPEG_AVI,
+        SYNTH_MJPEG,
+        decode_mjpeg_stage,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_mjpeg_features(encode_mjpeg_avi(synth_mjpeg_pixels(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_MJPEG, ENCODE_MJPEG_AVI,
+        decode_mjpeg_stage(),
+    )
 
 
 @register(
@@ -909,20 +916,15 @@ def q_multimodal_mjpeg_avi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     "coefficients at zigzag 1/6/15/28, so run-length coding is "
     "genuinely exercised on the graded path (not just DC+EOB). This "
     "retires the 'lossy codecs' NotImplementedError seam for images; "
-    "only MP3/H.264 remain environment-stubbed. Plan: two chained "
+    "only MP3/H.264 remain environment-stubbed. Plan: one "
     "mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; DCT/IDCT are vectorized "
     "int64 numpy matmuls per payload batch. See "
     "operators/jpeg.py:parse_jpeg.",
 )
 def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_mapreduce_spark.operators.jpeg import (
-        decode_jpeg_features,
-        encode_jpeg,
-        synth_jpeg_pixels,
-    )
+    from ds_mapreduce_spark.operators.jpeg import JPEG_CHAIN
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_jpeg_features(encode_jpeg(synth_jpeg_pixels(docs)))
+    return map_stages(_doc_ids_spread(spark, sf_dir), *JPEG_CHAIN)
 
 
 @register(
@@ -938,21 +940,21 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(UNNEST(range(0, 1024, 4))) and never sees a WAV byte — parity "
     "proves the parse->decimate->re-encode->parse chain bit-exact. "
     "Closes the 'frame-sample' leg of the mandated multimodal "
-    "surface as REAL. Three chained mapInPandas, map-only, zero "
+    "surface as REAL. One mapInPandas, map-only, zero "
     "shuffles; decimation shrinks payloads ~4x. See "
     "operators/multimodal.py:decimate_wav.",
 )
 def q_multimodal_wav_decimate_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.multimodal import (
-        decimate_wav,
-        decode_wav_features,
-        encode_wav,
-        synth_pcm_samples,
+        DECODE_WAV,
+        ENCODE_WAV,
+        SYNTH_PCM,
+        decimate_wav_stage,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_wav_features(
-        decimate_wav(encode_wav(synth_pcm_samples(docs)), stride=4)
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_WAV,
+        decimate_wav_stage(stride=4), DECODE_WAV,
     )
 
 
@@ -1060,21 +1062,19 @@ FROM r GROUP BY doc_id
     "sample-for-sample, plus quantizer brute-force over every step "
     "index). The per-block index reset makes blocks decode-"
     "independent — the audio analog of JPEG restart intervals: the "
-    "intra-payload parallelism seam at 100 TB. Plan: two chained "
+    "intra-payload parallelism seam at 100 TB. Plan: one "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
-    "narrow-key spread; 4-bit packing is the cheapest "
-    "executor->Python transfer in the audio family. See "
+    "narrow-key spread; 4-bit packing is the smallest "
+    "payload in the audio family. See "
     "operators/adpcm.py.",
 )
 def q_multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_mapreduce_spark.operators.adpcm import (
-        decode_adpcm_features,
-        encode_adpcm,
-    )
-    from ds_mapreduce_spark.operators.multimodal import synth_pcm_samples
+    from ds_mapreduce_spark.operators.adpcm import DECODE_ADPCM, ENCODE_ADPCM
+    from ds_mapreduce_spark.operators.multimodal import SYNTH_PCM
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_adpcm_features(encode_adpcm(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_ADPCM, DECODE_ADPCM
+    )
 
 
 @register(
@@ -1097,21 +1097,19 @@ def q_multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "-> reconstruct is the identity on every sample (the PNG/DEFLATE "
     "precedent, entropy-coding edition); tests/test_flac.py locks "
     "the CRC polynomials, coded-number widths, compression on "
-    "low-entropy signals, and the tamper paths. Plan: two chained "
+    "low-entropy signals, and the tamper paths. Plan: one "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
     "narrow-key spread; frames are decode-independent after "
     "STREAMINFO (the JPEG-restart / ADPCM-block parallelism seam). "
     "See operators/flac.py.",
 )
 def q_multimodal_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_mapreduce_spark.operators.flac import (
-        decode_flac_features,
-        encode_flac,
-    )
-    from ds_mapreduce_spark.operators.multimodal import synth_pcm_samples
+    from ds_mapreduce_spark.operators.flac import DECODE_FLAC, ENCODE_FLAC
+    from ds_mapreduce_spark.operators.multimodal import SYNTH_PCM
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_flac_features(encode_flac(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_FLAC, DECODE_FLAC
+    )
 
 
 def _animgif_oracle() -> str:
@@ -1191,20 +1189,21 @@ FROM v GROUP BY doc_id, t
     "storage economics that make temporal coding matter at 100 TB; "
     "composition chains frames WITHIN a payload (the inter-frame "
     "seam's defining cost) while payloads stay independent rows. "
-    "Plan: two chained mapInPandas, map-only, zero data-bearing "
+    "Plan: one mapInPandas, map-only, zero data-bearing "
     "shuffles beyond the narrow-key spread. See operators/animgif.py.",
 )
 def q_multimodal_animgif_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ds_mapreduce_spark.operators.animgif import (
-        decode_animgif_features,
-        encode_animgif,
-        synth_anim_frames,
+        DECODE_ANIMGIF,
+        ENCODE_ANIMGIF,
+        SYNTH_ANIM,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_animgif_features(encode_animgif(synth_anim_frames(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_ANIM, ENCODE_ANIMGIF, DECODE_ANIMGIF
+    )
 
 
 def _mdct_oracle() -> str:
@@ -1348,19 +1347,17 @@ GROUP BY doc_id
     "splits one payload's granules across tasks). ~0.73x of raw "
     "PCM16 at <500 LSB max error on this corpus — real "
     "rate-distortion, priced against the lossless WAV row by the "
-    "shared schema. Plan: two chained mapInPandas, map-only, zero "
+    "shared schema. Plan: one mapInPandas, map-only, zero "
     "data-bearing shuffles beyond the narrow-key spread. See "
     "operators/mdct.py.",
 )
 def q_multimodal_mdct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ds_mapreduce_spark.operators.mdct import (
-        decode_mdct_features,
-        encode_mdct,
-    )
-    from ds_mapreduce_spark.operators.multimodal import synth_pcm_samples
+    from ds_mapreduce_spark.operators.mdct import DECODE_MDCT, ENCODE_MDCT
+    from ds_mapreduce_spark.operators.multimodal import SYNTH_PCM
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_mdct_features(encode_mdct(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_MDCT, DECODE_MDCT
+    )
 
 
 def _mcv_oracle() -> str:
@@ -1550,19 +1547,20 @@ FROM r GROUP BY doc_id, t
     "cannot reach the displacement in-picture) exercise the full "
     "residual path every frame. CRC-8-framed frames; prediction "
     "chains frames WITHIN a payload (the inter-coding seam, as "
-    "animgif), payloads stay independent rows. Plan: two chained "
+    "animgif), payloads stay independent rows. Plan: one "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
     "narrow-key spread. See operators/mcv.py.",
 )
 def q_multimodal_mcv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_mapreduce_spark.operators.mcv import (
-        decode_mcv_features,
-        encode_mcv,
-        synth_scroll_frames,
+        DECODE_MCV,
+        ENCODE_MCV,
+        SYNTH_SCROLL,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_mcv_features(encode_mcv(synth_scroll_frames(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_SCROLL, ENCODE_MCV, DECODE_MCV
+    )
 
 
 def _mp3_oracle() -> str:
@@ -1647,7 +1645,7 @@ GROUP BY doc_id
     "zero slack bytes, and exact stream end, then reconstructs the "
     "audio through the shared synthesis path — graded sample-exactly "
     "alongside the byte census. Plan: identical map-only shape to the "
-    "MDCT row (narrow-key spread -> chained Arrow mapInPandas, zero "
+    "MDCT row (narrow-key spread -> one Arrow mapInPandas, zero "
     "data-bearing shuffles); frames are decode-independent after the "
     "tag, the splittability property real distributed MP3 ingest "
     "relies on. See operators/mpeg_audio.py.",
@@ -1655,14 +1653,12 @@ GROUP BY doc_id
 def q_multimodal_mp3_framing_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ds_mapreduce_spark.operators.mpeg_audio import (
-        decode_mp3_features,
-        encode_mp3,
-    )
-    from ds_mapreduce_spark.operators.multimodal import synth_pcm_samples
+    from ds_mapreduce_spark.operators.mpeg_audio import DECODE_MP3, ENCODE_MP3
+    from ds_mapreduce_spark.operators.multimodal import SYNTH_PCM
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_mp3_features(encode_mp3(synth_pcm_samples(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_PCM, ENCODE_MP3, DECODE_MP3
+    )
 
 
 def _annexb_oracle() -> str:
@@ -1774,7 +1770,7 @@ FROM agg a LEFT JOIN emu USING (doc_id)
     "byte-for-byte; decode reassembles the MCV1 container from "
     "parsed geometry and re-validates every frame CRC, so the pixel "
     "features grade the whole wrap -> escape -> scan -> unescape -> "
-    "parse -> decode chain. Plan: map-only chained Arrow mapInPandas "
+    "parse -> decode chain. Plan: one map-only Arrow mapInPandas "
     "on the narrow-key spread, zero data-bearing shuffles; the "
     "start-code scan is the property that makes H.264 elementary "
     "streams SPLITTABLE at 100 TB. See operators/annexb.py.",
@@ -1782,13 +1778,10 @@ FROM agg a LEFT JOIN emu USING (doc_id)
 def q_multimodal_h264_annexb_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ds_mapreduce_spark.operators.annexb import (
-        decode_annexb_features,
-        wrap_annexb_df,
-    )
-    from ds_mapreduce_spark.operators.mcv import encode_mcv, synth_scroll_frames
+    from ds_mapreduce_spark.operators.annexb import DECODE_ANNEXB, WRAP_ANNEXB
+    from ds_mapreduce_spark.operators.mcv import ENCODE_MCV, SYNTH_SCROLL
 
-    docs = _doc_ids_spread(spark, sf_dir)
-    return decode_annexb_features(
-        wrap_annexb_df(encode_mcv(synth_scroll_frames(docs)))
+    return map_stages(
+        _doc_ids_spread(spark, sf_dir), SYNTH_SCROLL, ENCODE_MCV, WRAP_ANNEXB,
+        DECODE_ANNEXB,
     )

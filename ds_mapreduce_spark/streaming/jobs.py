@@ -1592,28 +1592,25 @@ def run_streaming_media_features(
     ingest pipeline. Documents arrive as micro-batches; each batch is
     synthesized into JPEG payloads and decoded back through the SAME
     real codec chain the batch ``multimodal_jpeg_roundtrip`` query
-    uses (``synth_jpeg_pixels -> encode_jpeg -> decode_jpeg_features``
-    — full JFIF container, fixed-point IDCT), landing per-doc features
-    in a per-batch log. The decode is a deterministic per-row map, so
-    per-doc rows are independent of batching and the union over ANY
-    chunking of the feed is bit-equal to the batch query — the
+    uses (``JPEG_CHAIN``: synth -> encode -> decode in one
+    ``mapInPandas`` — full JFIF container, fixed-point IDCT), landing
+    per-doc features in a per-batch log. The decode is a deterministic
+    per-row map, so per-doc rows are independent of batching and the
+    union over ANY chunking of the feed is bit-equal to the batch
+    query — the
     stateless-twin pattern run_streaming_bpe_encode established, with
     zero state by design. 100 TB: this is how a multimodal ingest
     actually runs — payloads decoded once at arrival, features written
     columnar so downstream reads prune the payload bytes away,
     throughput scan-bound and embarrassingly parallel (no shuffle in
     the per-batch plan)."""
-    from ds_mapreduce_spark.operators.jpeg import (
-        decode_jpeg_features,
-        encode_jpeg,
-        synth_jpeg_pixels,
-    )
+    from ds_mapreduce_spark.operators.jpeg import JPEG_CHAIN
+    from ds_mapreduce_spark.operators.multimodal import map_stages
 
     stream = _source(spark, docs_dir, per_file=True)
 
     def step(batch: DataFrame, prev) -> dict:
-        pixels = synth_jpeg_pixels(batch.select("doc_id"))
-        return {"features": decode_jpeg_features(encode_jpeg(pixels))}
+        return {"features": map_stages(batch.select("doc_id"), *JPEG_CHAIN)}
 
     versions = _fold(stream, state_dir, checkpoint_dir, step)
     return _union(

@@ -1,16 +1,19 @@
 """Dump .explain('formatted') for headline queries into plans/r16/.
 
 Usage: python scripts/dump_plans_r16.py <suffix> [query ...]
-  suffix = "before" or "after"; with no query names, dumps every
-  headline row. Planning only (no noop write), though builders with
-  eager checkpoints/memoized stores still execute those side steps.
+  suffix names the dump (e.g. "before" / "after"); files are
+  plans/r16/<query>_<suffix>.txt under the checkout this script lives
+  in. With no query names, dumps every headline row. Planning only
+  (no noop write), though builders with eager checkpoints/memoized
+  stores still execute those side steps.
 """
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from ds_mapreduce_spark.plans.registry import load_all
@@ -21,7 +24,7 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = "/root/repo/plans/r16"
+    out_dir = os.path.join(ROOT, "plans", "r16")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-dump-r16")
     registry = load_all()

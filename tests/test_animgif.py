@@ -29,7 +29,7 @@ from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
 
 
 def synth_frames(doc_id: int) -> list[bytes]:
-    """Pure-Python twin of synth_anim_frames / the DuckDB oracle."""
+    """Pure-Python twin of animgif._anim_frames / the DuckDB oracle."""
     frames = []
     for t in range(ANIM_FRAMES):
         bx = (doc_id + t * 3) % _BX_MOD

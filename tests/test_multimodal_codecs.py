@@ -216,7 +216,7 @@ def test_png_decoder_reads_foreign_containers(spark):
 
 
 def test_png_encoder_output_parses_as_standard_png():
-    """encode_png's bytes round-trip through the spec-side parser and
+    """ENCODE_PNG's bytes round-trip through the spec-side parser and
     carry the PNG signature + IEND trailer of a standard file."""
     from ds_mapreduce_spark.operators.multimodal import (
         _encode_png_bytes,
@@ -275,7 +275,7 @@ def test_resize_rejects_corrupt_containers(spark):
 
 
 def test_numpy_synths_match_closed_forms_and_handle_empty(spark):
-    """The numpy-rendered synthesizers (multimodal.synth_map_arrays —
+    """The numpy-rendered synthesizers (multimodal.synth_stage —
     the late-r11 replacement for interpreted transform(sequence())
     expressions) must (a) reproduce the documented closed forms
     element-for-element on a concrete doc_id and (b) return an empty,
@@ -317,3 +317,44 @@ def test_numpy_synths_match_closed_forms_and_handle_empty(spark):
     out = synth_pcm_samples(empty)
     assert out.count() == 0
     assert out.columns == ["doc_id", "samples"]
+
+
+@pytest.mark.parametrize(
+    "codec,damage,message",
+    [
+        # drop the tail of the JFIF file: EOI and the end of the scan
+        ("jpeg", lambda p: p[:-20], "truncated entropy-coded scan"),
+        # flip one bit of the byte before the stream's final stop
+        # byte: the last slice's MCV1 frame CRC
+        ("annexb", lambda p: p[:-2] + bytes([p[-2] ^ 1]) + p[-1:],
+         "MCV1 frame CRC mismatch"),
+    ],
+    ids=["jpeg-truncated", "annexb-crc-bit"],
+)
+def test_fused_chain_fails_on_damaged_container(spark, codec, damage, message):
+    """A stage that damages every payload between encode and decode
+    makes the fused one-mapInPandas job fail with the DECODER's
+    ValueError — the chain still parses the real container bytes
+    instead of handing pixels past them (the "ValueError on any corrupt
+    input" promise, end to end). The undamaged chain is the control."""
+    from ds_mapreduce_spark.operators.annexb import DECODE_ANNEXB, WRAP_ANNEXB
+    from ds_mapreduce_spark.operators.jpeg import JPEG_CHAIN
+    from ds_mapreduce_spark.operators.mcv import ENCODE_MCV, SYNTH_SCROLL
+    from ds_mapreduce_spark.operators.multimodal import (
+        PAYLOAD_SCHEMA,
+        Stage,
+        map_stages,
+    )
+
+    *encode, decode = {
+        "jpeg": JPEG_CHAIN,
+        "annexb": (SYNTH_SCROLL, ENCODE_MCV, WRAP_ANNEXB, DECODE_ANNEXB),
+    }[codec]
+    corrupt = Stage(
+        lambda b: b.assign(payload=[damage(bytes(p)) for p in b["payload"]]),
+        PAYLOAD_SCHEMA,
+    )
+    docs = spark.range(1, 9).withColumnRenamed("id", "doc_id")
+    assert map_stages(docs, *encode, decode).count() >= 8
+    with pytest.raises(Exception, match=f"ValueError: {message}"):
+        map_stages(docs, *encode, corrupt, decode).collect()

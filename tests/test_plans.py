@@ -191,7 +191,8 @@ def test_filter_project_pushes_all_predicates(spark, sf_dir):
         # r8: tokenizer apply — vocab lookup join + ONE doc agg; the
         # training loop runs inside the vocab checkpoints
         ("bpe_encode_census", 1),
-        # Codec roundtrips (r8/r9): chained map-only mapInPandas; the
+        # Codec roundtrips (r8/r9): ONE map-only mapInPandas running the
+        # whole chain (test_codec_chain_is_one_map_in_pandas); the
         # ONE budgeted exchange is the narrow-key spread repartition
         # (_doc_ids_spread) that parallelizes the Python codec stage —
         # synthesis expands 8-byte doc_ids into KB payloads, so
@@ -199,8 +200,8 @@ def test_filter_project_pushes_all_predicates(spark, sf_dir):
         # onto one core (measured: MJPEG 13.9 s -> 1.5 s at sf0.1).
         ("multimodal_wav_roundtrip", 1),
         ("multimodal_ppm_roundtrip", 1),
-        # r9: real container->container transforms — three chained
-        # mapInPandas after the spread
+        # r9: real container->container transforms — the resize /
+        # decimate step is one more stage of the same mapInPandas
         ("multimodal_ppm_resize_real", 1),
         ("multimodal_wav_decimate_real", 1),
         # r9: real COMPRESSED codec (PNG, stdlib zlib) — same
@@ -244,9 +245,9 @@ def test_filter_project_pushes_all_predicates(spark, sf_dir):
         # r11: MPEG-audio framing (ID3v2 + Layer III VBR headers over
         # the MDCT granules) — same map-only two-pass shape
         ("multimodal_mp3_framing_roundtrip", 1),
-        # r11: H.264 Annex-B NAL wrap of the MCV frames — THREE
-        # chained mapInPandas (encode, wrap, parse+decode) after the
-        # one spread exchange, still map-only
+        # r11: H.264 Annex-B NAL wrap of the MCV frames — synth,
+        # encode, wrap and parse+decode are stages of the one
+        # mapInPandas after the one spread exchange, still map-only
         ("multimodal_h264_annexb_roundtrip", 1),
         # r9: winnowing screen vs exact-20 truth — gram census +
         # truth distinct + fp census + flagged distinct + 1-row
@@ -327,6 +328,30 @@ def test_shuffle_budget(spark, sf_dir, name, max_exchanges):
     plan = _plan(spark, sf_dir, name)
     n = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n <= max_exchanges, f"{name}: {n} shuffles (budget {max_exchanges})"
+
+
+#: Every synth -> encode -> (wrap/resize/decimate) -> decode roundtrip.
+CODEC_ROUNDTRIPS = sorted(
+    n for n in REGISTRY if n.startswith("multimodal_") and n.endswith(
+        ("_roundtrip", "_resize_real", "_decimate_real")
+    )
+)
+
+
+def test_codec_roundtrip_list_is_complete():
+    assert len(CODEC_ROUNDTRIPS) == 17, CODEC_ROUNDTRIPS
+
+
+@pytest.mark.parametrize("name", CODEC_ROUNDTRIPS)
+def test_codec_chain_is_one_map_in_pandas(spark, sf_dir, name):
+    """The whole codec chain runs as stages of ONE mapInPandas
+    (multimodal.map_stages), so the payload crosses JVM -> Python
+    once per query; the one shuffle is still the narrow-key spread."""
+    plan = _plan(spark, sf_dir, name)
+    n_map = sum("MapInPandas" in line for line in plan.splitlines())
+    assert n_map == 1, f"{name}: {n_map} MapInPandas nodes\n{plan}"
+    n_ex = plan.count("Exchange") - plan.count("BroadcastExchange")
+    assert n_ex == 1, f"{name}: {n_ex} shuffles\n{plan}"
 
 
 def test_q19_derives_single_side_filters_from_disjunction(spark, sf_dir):
@@ -850,7 +875,7 @@ def test_funnel_no_hot_window_partitions(spark, sf_dir):
 #: whose speed is C2-profile luck (the same synth measured 1.2 s vs
 #: 7.5 s across runs on identical code). Payload/corpus synthesis must
 #: use vectorized numpy inside the mapInPandas chain instead
-#: (`multimodal.synth_map_arrays`).
+#: (`multimodal.synth_stage`).
 HOF_OVER_SEQUENCE_ALLOWED = {
     "bloom_ngram_decontamination": 1,   # n-gram shingle builder
     "bpe_pair_merge_stats": 1,          # adjacent-pair builder
